@@ -13,6 +13,7 @@ hand them to ChangeSetProcessor, honoring the group-level ``--dry-run``
 
 from __future__ import annotations
 
+import functools
 from pathlib import Path
 
 import click
@@ -23,6 +24,7 @@ from dbt_meshify_spark.plans.graph import select_resources
 from dbt_meshify_spark.plans.grouper import create_group as plan_create_group
 from dbt_meshify_spark.plans.grouper import group_and_contract
 from dbt_meshify_spark.plans.linker import dependencies, resolve_dependency
+from dbt_meshify_spark.plans.manifest import property_file
 from dbt_meshify_spark.plans.splitter import (
     SplitError,
     SubprojectCreator,
@@ -76,13 +78,85 @@ class TupleCompatibleCommand(click.Command):
         formatter.write_usage(ctx.command_path, " ".join(pieces))
 
 
-def _patch_path(project: SparkProject, r) -> Path:
-    """Resource's property file, synthesized next to the model when absent
-    (reference dbt_projects.py:237-254)."""
-    if r.patch_path:
-        return project.root / r.patch_path
-    parent_dir = Path(r.path).parent if r.path else Path("models")
-    return project.root / parent_dir / f"_{r.resource_type}s.yml"
+def _options(*options):
+    """One decorator applying ``options`` in the order listed (the order
+    --help prints them)."""
+
+    def decorate(f):
+        for option in reversed(options):
+            f = option(f)
+        return f
+
+    return decorate
+
+
+# the --select/--exclude/--selector/--project-path block (reference
+# cli.py:64-80)
+_selection = _options(
+    click.option("--select", "-s", cls=MultiOption, multiple=True),
+    click.option("--exclude", "-e", cls=MultiOption, multiple=True),
+    click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml"),
+    click.option("--project-path", default=".", type=click.Path(exists=True)),
+)
+
+
+def _required_selection(f):
+    """The selection block, rejecting a call with neither --select nor
+    --selector before the command body runs."""
+
+    @functools.wraps(f)
+    def checked(*args, **kwargs):
+        if not kwargs["select"] and not kwargs["selector"]:
+            raise click.ClickException("one of --select/--selector is required")
+        return f(*args, **kwargs)
+
+    return _selection(checked)
+
+
+_owner_options = _options(
+    click.option("--owner-name", default=None),
+    click.option("--owner-email", default=None),
+    click.option("--owner-properties", default=None,
+                 help="YAML/JSON dict of additional Owner properties (reference cli.py:93-97)"),
+    click.option("--group-yml-path", default=None, type=click.Path()),
+)
+
+
+def _owner(owner_name, owner_email, owner_properties) -> dict:
+    """The group Owner from --owner-name/--owner-email, with
+    --owner-properties merged in (reference main.py:612)."""
+    import yaml as _yaml
+
+    owner = {
+        k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
+    }
+    if not owner:
+        raise click.ClickException("an owner (--owner-name/--owner-email) is required")
+    if owner_properties:
+        owner.update(_yaml.safe_load(owner_properties) or {})
+    return owner
+
+
+def _group_yml(project: SparkProject, group_yml_path) -> Path:
+    return Path(group_yml_path) if group_yml_path else project.root / "models/_groups.yml"
+
+
+_bump_options = _options(
+    click.option("--latest", "-l", is_flag=True,
+                 help="make the new version the latest version"),
+    click.option("--increment", is_flag=True,
+                 help="advance latest_version by 1"),
+)
+
+
+def _bump_behavior(latest: bool, increment: bool) -> BumpBehavior:
+    """latest_version policy: --latest pins it to the new version,
+    --increment advances it by 1, default (prerelease) keeps it."""
+    if latest and increment:
+        raise click.ClickException("Cannot specify both --latest and --increment.")
+    if latest:
+        return BumpBehavior.Latest
+    return BumpBehavior.Increment if increment else BumpBehavior.Prerelease
 
 
 def _select(
@@ -190,18 +264,13 @@ def cli(ctx: click.Context, dry_run: bool) -> None:
 
 @cli.command(cls=TupleCompatibleCommand)
 @click.argument("project_name")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
+@_required_selection
 @click.option("--create-path", default=None, type=click.Path())
 @click.option("--read-catalog", is_flag=True, help="trust target/catalog.json instead of live schema analysis")
 @click.pass_context
 def split(ctx, project_name, select, exclude, selector, project_path, create_path, read_catalog) -> None:
     """Split SELECTed resources into a new subproject (reference
     main.py:213-267)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
     try:
         sub = build_subproject(
@@ -283,7 +352,7 @@ def connect(ctx, project_paths, projects_dir, exclude_projects) -> None:
                     upstream.manifest,
                     downstream.manifest,
                     downstream.root,
-                    upstream_patch_path=_patch_path(upstream, up_model),
+                    upstream_patch_path=upstream.root / property_file(up_model),
                 )
             )
     if not change_sets:
@@ -303,10 +372,7 @@ def operation() -> None:
 @operation.command(name="add-contract")
 @click.option("--read-catalog", "-r", is_flag=True,
               help="trust target/catalog.json instead of live schema analysis")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
+@_required_selection
 @click.pass_context
 def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> None:
     """Generate enforced column contracts from live Spark schemas, or from
@@ -314,8 +380,6 @@ def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> 
     (reference main.py:268-316, contractor.py:14-47)."""
     from dbt_meshify_spark.plans.contracts import generate_contract_from_columns
 
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
     models = _selected_models(project, select, exclude, selector)
     if not models:
@@ -327,29 +391,24 @@ def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> 
         if cols is None:
             raise click.ClickException(f"could not derive schema for {r.name}")
         changes.add(
-            generate_contract_from_columns(r.name, cols, _patch_path(project, r))
+            generate_contract_from_columns(r.name, cols, project.root / property_file(r))
         )
     _process(ctx, changes)
 
 
 @operation.command(name="add-version")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
+@_required_selection
 @click.option("--defined-in", default=None)
 @click.pass_context
 def op_add_version(ctx, select, exclude, selector, project_path, defined_in) -> None:
     """First version (v=1) for unversioned models (reference
     main.py:318-368, versioner.py:79-134)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
     sets = []
     for r in _selected_models(project, select, exclude, selector):
         sets.append(
             add_version(
-                r, _patch_path(project, r), (project.root / r.path).parent,
+                r, project.root / property_file(r), (project.root / r.path).parent,
                 defined_in=defined_in,
             )
         )
@@ -357,14 +416,8 @@ def op_add_version(ctx, select, exclude, selector, project_path, defined_in) -> 
 
 
 @operation.command(name="bump-version")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
-@click.option("--latest", "-l", is_flag=True,
-              help="make the new version the latest version")
-@click.option("--increment", is_flag=True,
-              help="advance latest_version by 1")
+@_required_selection
+@_bump_options
 @click.option("--defined-in", default=None,
               help="file name for the new version (reference versioner.py:182-186)")
 @click.pass_context
@@ -374,24 +427,14 @@ def op_bump_version(
     """Next version = max+1; latest_version per behavior — default
     prerelease keeps it pinned, --increment advances by 1, --latest pins
     to the new version (reference main.py:370-440, versioner.py:136-212)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
+    behavior = _bump_behavior(latest, increment)
     project = SparkProject.load(project_path)
-    if latest and increment:
-        raise click.ClickException(
-            "Cannot specify both --latest and --increment."
-        )
-    behavior = (
-        BumpBehavior.Latest
-        if latest
-        else BumpBehavior.Increment if increment else BumpBehavior.Prerelease
-    )
     sets = []
     for r in _selected_models(project, select, exclude, selector):
         sets.append(
             bump_version(
                 r,
-                _patch_path(project, r),
+                project.root / property_file(r),
                 (project.root / r.path).parent,
                 behavior=behavior,
                 existing_versions=r.meta.get("versions"),
@@ -403,43 +446,25 @@ def op_bump_version(
 
 @operation.command(name="create-group", cls=TupleCompatibleCommand)
 @click.argument("name")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
-@click.option("--owner-name", default=None)
-@click.option("--owner-email", default=None)
-@click.option("--owner-properties", default=None,
-              help="YAML/JSON dict of additional Owner properties (reference cli.py:93-97)")
-@click.option("--group-yml-path", default=None, type=click.Path())
+@_required_selection
+@_owner_options
 @click.pass_context
 def op_create_group(
     ctx, name, select, exclude, selector, project_path, owner_name, owner_email,
     owner_properties, group_yml_path
 ) -> None:
     """Group YAML + member access patches (reference main.py:556-629)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
-    import yaml as _yaml
-
-    owner = {
-        k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
-    }
-    if not owner:
-        raise click.ClickException("an owner (--owner-name/--owner-email) is required")
-    if owner_properties:
-        # reference main.py:612: extra properties merge into the Owner dict
-        owner.update(_yaml.safe_load(owner_properties) or {})
+    owner = _owner(owner_name, owner_email, owner_properties)
     selected = _select(project, select, exclude, selector)
-    path = Path(group_yml_path) if group_yml_path else project.root / "models/_groups.yml"
+    path = _group_yml(project, group_yml_path)
     changes = plan_create_group(
         project.manifest,
         name,
         owner,
         selected,
         path,
-        lambda r: _patch_path(project, r),
+        lambda r: project.root / property_file(r),
     )
     _process(ctx, changes)
 
@@ -449,15 +474,8 @@ def op_create_group(
 
 @cli.command(cls=TupleCompatibleCommand)
 @click.argument("name")
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
-@click.option("--owner-name", default=None)
-@click.option("--owner-email", default=None)
-@click.option("--owner-properties", default=None,
-              help="YAML/JSON dict of additional Owner properties (reference cli.py:93-97)")
-@click.option("--group-yml-path", default=None, type=click.Path())
+@_required_selection
+@_owner_options
 @click.pass_context
 def group(
     ctx, name, select, exclude, selector, project_path, owner_name, owner_email,
@@ -465,28 +483,17 @@ def group(
 ) -> None:
     """create-group + contracts on every protected boundary member
     (reference main.py:632-687)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
-    import yaml as _yaml
-
-    owner = {
-        k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
-    }
-    if not owner:
-        raise click.ClickException("an owner (--owner-name/--owner-email) is required")
-    if owner_properties:
-        # reference main.py:612: extra properties merge into the Owner dict
-        owner.update(_yaml.safe_load(owner_properties) or {})
+    owner = _owner(owner_name, owner_email, owner_properties)
     selected = _select(project, select, exclude, selector)
     schemas = _lazy_schemas(project)
-    path = Path(group_yml_path) if group_yml_path else project.root / "models/_groups.yml"
+    path = _group_yml(project, group_yml_path)
 
     def contract_for(r):
         df = schemas.get(r.name)
         if df is None:
             return None
-        return generate_contract(r.name, df, _patch_path(project, r))
+        return generate_contract(r.name, df, project.root / property_file(r))
 
     changes = group_and_contract(
         project.manifest,
@@ -494,21 +501,15 @@ def group(
         owner,
         selected,
         path,
-        lambda r: _patch_path(project, r),
+        lambda r: project.root / property_file(r),
         contract_for,
     )
     _process(ctx, changes)
 
 
 @cli.command()
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
-@click.option("--latest", "-l", is_flag=True,
-              help="make the new version the latest version")
-@click.option("--increment", is_flag=True,
-              help="advance latest_version by 1")
+@_required_selection
+@_bump_options
 @click.option("--defined-in", default=None)
 @click.pass_context
 def version(
@@ -517,20 +518,12 @@ def version(
     """Add a version when unversioned, else bump (reference
     main.py:442-553: chains add + bump so the copy source is the moved _v1
     file)."""
-    if not select and not selector:
-        raise click.ClickException("one of --select/--selector is required")
-    if latest and increment:
-        raise click.ClickException("Cannot specify both --latest and --increment.")
+    behavior = _bump_behavior(latest, increment)
     project = SparkProject.load(project_path)
-    behavior = (
-        BumpBehavior.Latest
-        if latest
-        else BumpBehavior.Increment if increment else BumpBehavior.Prerelease
-    )
     sets = []
     for r in _selected_models(project, select, exclude, selector):
         model_dir = (project.root / r.path).parent
-        patch = _patch_path(project, r)
+        patch = project.root / property_file(r)
         if r.meta.get("versions") or r.version is not None:
             sets.append(
                 bump_version(
@@ -551,10 +544,7 @@ def version(
 
 
 @cli.command()
-@click.option("--select", "-s", cls=MultiOption, multiple=True)
-@click.option("--exclude", "-e", cls=MultiOption, multiple=True)
-@click.option("--selector", cls=MultiOption, multiple=True, help="named selector(s) from selectors.yml")
-@click.option("--project-path", default=".", type=click.Path(exists=True))
+@_selection
 @click.option("--resource-type", default=None)
 @click.option("--state", default=None, type=click.Path(exists=True),
               help="prior target/manifest.json for state:modified selection")

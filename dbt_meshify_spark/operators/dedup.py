@@ -77,15 +77,6 @@ def shingles_of_tokens(toks: Column, n: int, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def word_shingles(text: Column, n: int) -> Column:
-    """Distinct word n-grams of ``text`` (array<string>).
-
-    Convenience form for one-shot use; hot paths stage tokens first and use
-    ``shingles_of_tokens`` (see its docstring for why).
-    """
-    return shingles_of_tokens(tokens_col(text), n)
-
-
 def _with_tokens(df: DataFrame, text_col: str, out_col: str = "__toks") -> DataFrame:
     """Spread parallelism and stage the token array once as a real column."""
     return spread(df).withColumn(out_col, tokens_col(F.col(text_col)))

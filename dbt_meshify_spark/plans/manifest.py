@@ -18,6 +18,7 @@ joins when the graph outgrows the driver (SURVEY.md §1.1).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +54,16 @@ class Resource:
         if not self.package:
             parts = self.unique_id.split(".")
             self.package = parts[1] if len(parts) > 1 else ""
+
+
+def property_file(resource: Resource) -> Path:
+    """The resource's property file relative to its project root: its
+    ``patch_path``, else ``_<type>s.yml`` synthesized next to the resource's
+    file (reference dbt_projects.py:237-254)."""
+    if resource.patch_path:
+        return Path(resource.patch_path)
+    parent_dir = Path(resource.path).parent if resource.path else Path("models")
+    return parent_dir / f"_{resource.resource_type}s.yml"
 
 
 def _resource_fingerprint(r: "Resource") -> str:

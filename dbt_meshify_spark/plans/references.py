@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from dbt_meshify_spark.plans.changes import Change, ChangeSet, EntityType, Operation
+from dbt_meshify_spark.plans.changes import ChangeSet
 
 
 def _ref_pattern(name: str) -> re.Pattern:
@@ -103,26 +103,6 @@ def rewrite_yaml_refs(doc: dict, model_name: str, project_name: str) -> dict:
         return value
 
     return fix(doc)
-
-
-def update_child_refs(
-    child_path: Path,
-    current_code: str,
-    moved_model_name: str,
-    new_project_name: str,
-    language: str = "sql",
-) -> Change:
-    """R5 building block: rewrite one child's references to a model that
-    moved across the boundary; composes with pending edits via
-    ChangeSet.latest_for (reference references.py:215-360)."""
-    rewrite = rewrite_ref_python if language == "python" else rewrite_ref_sql
-    return Change(
-        operation=Operation.Update,
-        entity_type=EntityType.Code,
-        identifier=moved_model_name,
-        path=child_path,
-        data=rewrite(current_code, moved_model_name, new_project_name),
-    )
 
 
 def stack_code_change(

@@ -39,7 +39,7 @@ from dbt_meshify_spark.plans.graph import (
     xproj_parents,
 )
 from dbt_meshify_spark.plans.jinja_blocks import find_block_span
-from dbt_meshify_spark.plans.manifest import Manifest, Resource
+from dbt_meshify_spark.plans.manifest import Manifest, Resource, property_file
 from dbt_meshify_spark.plans.references import (
     rewrite_ref_python,
     rewrite_ref_sql,
@@ -166,14 +166,6 @@ class SubprojectCreator:
     def _parent_path(self, resource: Resource) -> Path:
         return self.parent.root / resource.path
 
-    def _patch_rel(self, resource: Resource) -> str:
-        """Property-file path for a resource, synthesized next to the file
-        when none exists (reference dbt_projects.py:237-254)."""
-        if resource.patch_path:
-            return resource.patch_path
-        parent_dir = str(Path(resource.path).parent) if resource.path else "models"
-        return f"{parent_dir}/_{resource.resource_type}s.yml"
-
     def _contract_columns(self, resource: Resource) -> list[dict]:
         if resource.name in self.catalog:
             return self.catalog[resource.name]
@@ -189,7 +181,7 @@ class SubprojectCreator:
             operation=Operation.Update,
             entity_type=EntityType.Model,
             identifier=resource.name,
-            path=root / self._patch_rel(resource),
+            path=root / property_file(resource),
             data={
                 "config": {"contract": {"enforced": True}},
                 "columns": self._contract_columns(resource),
@@ -201,7 +193,7 @@ class SubprojectCreator:
             operation=Operation.Update,
             entity_type=EntityType.Model,
             identifier=resource.name,
-            path=root / self._patch_rel(resource),
+            path=root / property_file(resource),
             data={"access": access},
         )
 

@@ -63,28 +63,6 @@ def _asc(c: str):
 
 _SCRATCH_ROOT: str | None = None
 
-# every prefix ever passed to _stream_scratch pre-round-11 (when scratch
-# dirs landed directly in /tmp) plus the scaling probe's — the legacy-prune
-# allowlist
-_LEGACY_SCRATCH_PREFIXES = (
-    "dms_late_drops_",
-    "stream_cls_",
-    "stream_cms_",
-    "stream_conv_",
-    "stream_decontam_",
-    "stream_dpc_",
-    "stream_es_",
-    "stream_gopher_",
-    "stream_inc_neardup_",
-    "stream_ldiv_",
-    "stream_novelty_",
-    "stream_psi_",
-    "stream_qsk_",
-    "stream_selfrep_",
-    "stream_wq_",
-    "stream_probe_",
-)
-
 
 def _stream_scratch(prefix: str) -> str:
     """Scratch dir for a streaming query's state/checkpoint/output.
@@ -128,14 +106,6 @@ def _stream_scratch(prefix: str) -> str:
                 if not os.path.isdir(path):
                     continue
                 try:
-                    if name.startswith(_LEGACY_SCRATCH_PREFIXES):
-                        # legacy pre-session-root scratch naming (OUR
-                        # prefixes only — never rmtree another app's
-                        # /tmp/stream_* on this shared host): age-only
-                        # prune, same 6h rule the old per-query prune used
-                        if os.path.getmtime(path) < stale_cutoff:
-                            shutil.rmtree(path, ignore_errors=True)
-                        continue
                     if not name.startswith("dms_scratch_"):
                         continue
                     parts = name.split("_")

@@ -145,11 +145,3 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
             "avro", "org.apache.spark:spark-avro_2.13:<spark-version>", e
         )
 
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    try:
-        df.write.mode(mode).format("avro").save(path)
-    except Exception as e:
-        _gate_missing_datasource(
-            "avro", "org.apache.spark:spark-avro_2.13:<spark-version>", e
-        )

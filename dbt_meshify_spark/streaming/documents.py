@@ -1,21 +1,31 @@
-"""Streaming document curation (N6 x N2): an unbounded document feed probed
-per micro-batch against a PERSISTED near-dup index.
+"""Streaming document curation (N6 x N2): per-micro-batch monitors over an
+unbounded document feed.
 
-This is the deployment shape of `operators/dedup.py::minhash_index` +
-`incremental_neardup_pairs`: the standing corpus is indexed once (stored
-band/signature tables); every arriving micro-batch of documents computes
-only its OWN signatures and equi-joins the stored bands — per-batch cost is
-O(batch + matches) no matter how large the corpus grows, and the index
-tables can be refreshed out-of-band without touching the stream. Drained
-with availableNow over a static directory, the emitted relation is exactly
-the batch probe's — which is how the DuckDB oracle can gate a streaming
-surface it cannot execute (same discipline as streaming/events.py).
+Every monitor here is a batch plan over ONE micro-batch — a near-dup probe
+against a PERSISTED index, a filter, a scorer, a sketch or a candidate
+top-k — run by the single drain in ``streaming/sinks.py``: batch-keyed
+overwrite commits, read back as the union of committed batches, and a typed
+empty result from the same plan when no batch was ever committed. A monitor
+only chooses its per-batch plan, its sink directory name, and what it does
+with the committed rows (re-merge sketch cells, re-rank candidates, or
+return them as-is).
+
+The stored-index probe is the deployment shape of
+`operators/dedup.py::minhash_index` + `incremental_neardup_pairs`: the
+standing corpus is indexed once and every micro-batch computes only its OWN
+signatures against the stored bands, so per-batch cost is O(batch +
+matches) however large the corpus grows. Drained with availableNow over a
+static directory, every monitor's emitted relation equals its batch
+operator's — which is how the DuckDB oracle gates a streaming surface it
+cannot execute (same discipline as streaming/events.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from dbt_meshify_spark.streaming.sinks import drain
 
 DOC_SCHEMA = T.StructType(
     [
@@ -75,18 +85,12 @@ def stream_neardup_against_index(
     foreachBatch is the right operator here — the probe is a multi-join
     batch plan (signature build + band equi-join + estimate), which
     Structured Streaming cannot express as a continuous stateful operator,
-    but CAN run exactly per micro-batch with transactional sinks. The
-    checkpoint makes redelivery at-least-once, so the sink is batch_id-KEYED
-    OVERWRITE (the stream_cms_heavy_hitters discipline; round 12 — the
-    earlier blind append would have duplicated a replayed batch's hits
-    after a crash between sink write and checkpoint commit).
+    but CAN run exactly per micro-batch with transactional sinks.
     """
     from dbt_meshify_spark.operators.dedup import incremental_neardup_pairs
 
-    spark = stream_docs.sparkSession
-
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        hits = incremental_neardup_pairs(
+    def probe(batch_df: DataFrame) -> DataFrame:
+        return incremental_neardup_pairs(
             batch_df,
             index_bands,
             index_sigs,
@@ -98,24 +102,8 @@ def stream_neardup_against_index(
             hash_fn=hash_fn,
             min_jaccard_est=min_jaccard_est,
         )
-        hits.write.mode("overwrite").parquet(f"{out_dir}/hits/batch={batch_id}")
 
-    q = (
-        stream_docs.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
-
-    hits = read_sink_or_none(spark, f"{out_dir}/hits")
-    if hits is None:
-        return spark.createDataFrame(
-            [], "new_id bigint, dup_of bigint, jaccard_est double"
-        )
-    # drop the batch=N partition column the keyed layout introduces
-    return hits.drop("batch")
+    return drain(stream_docs, out_dir, "hits", probe)
 
 
 def stream_gopher_filter(
@@ -138,37 +126,19 @@ def stream_gopher_filter(
 
     from dbt_meshify_spark.operators.heuristics import gopher_rules
 
-    spark = stream_docs.sparkSession
-    kept = (
-        gopher_rules(stream_docs, min_words=min_words)
-        .filter(F.col("gopher_keep"))
-        .select(
-            "doc_id",
-            "n_words",
-            "mean_word_len",
-            "stop_hits",
+    def keep(batch_df: DataFrame) -> DataFrame:
+        return (
+            gopher_rules(batch_df, min_words=min_words)
+            .filter(F.col("gopher_keep"))
+            .select(
+                "doc_id",
+                "n_words",
+                "mean_word_len",
+                "stop_hits",
+            )
         )
-    )
-    q = (
-        kept.writeStream.format("parquet")
-        .option("path", f"{out_dir}/rows")
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
 
-    # FILE sink: schema passed so a zero-batch drain (dir holds only
-    # _spark_metadata) reads as the typed empty frame instead of raising
-    # UNABLE_TO_INFER (r13 review)
-    sink_schema = (
-        "doc_id bigint, n_words bigint, mean_word_len double, stop_hits bigint"
-    )
-    rows = read_sink_or_none(spark, f"{out_dir}/rows", schema=sink_schema)
-    if rows is None:
-        return spark.createDataFrame([], sink_schema)
-    return rows
+    return drain(stream_docs, out_dir, "rows", keep)
 
 
 def stream_quality_psi(
@@ -191,7 +161,7 @@ def stream_quality_psi(
     against (same posture as ``pca_project`` on an empty basis).
 
     Per-batch cost is one projection + a ``n_buckets``-row aggregate; the
-    appended partials are (bucket, n) rows, so the monitor's state on disk
+    committed partials are (bucket, n) rows, so the monitor's state on disk
     grows with batches x n_buckets, not with documents. Drained
     availableNow the emitted relation equals ``score_psi(baseline, feed)``
     exactly (bucket counts are additive), which is how the DuckDB oracle
@@ -220,26 +190,11 @@ def stream_quality_psi(
         )
     lo, hi = float(edges["lo"]), float(edges["hi"])
 
-    def count_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cnts = score_buckets(
-            score_fn(batch_df), score_col, lo, hi, n_buckets, "n"
-        )
-        cnts.write.mode("append").parquet(f"{out_dir}/partials")
+    def count_batch(batch_df: DataFrame) -> DataFrame:
+        return score_buckets(score_fn(batch_df), score_col, lo, hi, n_buckets, "n")
 
-    q = (
-        stream_docs.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
-
-    partials = read_sink_or_none(spark, f"{out_dir}/partials")
-    if partials is None:
-        new_cnts = spark.createDataFrame([], "bucket int, n_new long")
-    else:
-        new_cnts = partials.groupBy("bucket").agg(F.sum("n").alias("n_new"))
+    partials = drain(stream_docs, out_dir, "partials", count_batch)
+    new_cnts = partials.groupBy("bucket").agg(F.sum("n").alias("n_new"))
     base_cnts = score_buckets(
         baseline_scored, score_col, lo, hi, n_buckets, "n_old"
     )
@@ -275,30 +230,10 @@ def stream_decontaminate(
     """
     from dbt_meshify_spark.operators.decontam import ngram_overlap
 
-    spark = stream_docs.sparkSession
-    ran = {"any": False}
+    def score(batch_df: DataFrame) -> DataFrame:
+        return ngram_overlap(batch_df, eval_df, n=n, min_overlap=min_overlap)
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        out = ngram_overlap(
-            batch_df, eval_df, n=n, min_overlap=min_overlap
-        )
-        out.write.mode("append").parquet(f"{out_dir}/verdicts")
-        ran["any"] = True
-
-    q = (
-        stream_docs.writeStream.foreachBatch(score)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not ran["any"]:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, n_grams bigint, matched bigint, "
-            "overlap double, contaminated boolean",
-        )
-    return spark.read.parquet(f"{out_dir}/verdicts")
+    return drain(stream_docs, out_dir, "verdicts", score)
 
 
 def stream_self_repetition(
@@ -316,28 +251,10 @@ def stream_self_repetition(
     """
     from dbt_meshify_spark.operators.dedup import remove_self_repetition
 
-    spark = stream_docs.sparkSession
-    ran = {"any": False}
+    def cut(batch_df: DataFrame) -> DataFrame:
+        return remove_self_repetition(batch_df, passage_tokens=passage_tokens)
 
-    def cut(batch_df: DataFrame, batch_id: int) -> None:
-        out = remove_self_repetition(batch_df, passage_tokens=passage_tokens)
-        out.write.mode("append").parquet(f"{out_dir}/cleaned")
-        ran["any"] = True
-
-    q = (
-        stream_docs.writeStream.foreachBatch(cut)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not ran["any"]:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, clean_text string, n_tokens_kept bigint, "
-            "n_tokens_removed bigint",
-        )
-    return spark.read.parquet(f"{out_dir}/cleaned")
+    return drain(stream_docs, out_dir, "cleaned", cut)
 
 
 def stream_gram_novelty(
@@ -360,26 +277,10 @@ def stream_gram_novelty(
     """
     from dbt_meshify_spark.operators.snapshots import gram_novelty
 
-    spark = stream_docs.sparkSession
-    ran = {"any": False}
+    def score(batch_df: DataFrame) -> DataFrame:
+        return gram_novelty(batch_df, reference, n=n)
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        out = gram_novelty(batch_df, reference, n=n)
-        out.write.mode("append").parquet(f"{out_dir}/novelty")
-        ran["any"] = True
-
-    q = (
-        stream_docs.writeStream.foreachBatch(score)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not ran["any"]:
-        return spark.createDataFrame(
-            [], "doc_id bigint, n_grams bigint, n_novel bigint, novelty double"
-        )
-    return spark.read.parquet(f"{out_dir}/novelty")
+    return drain(stream_docs, out_dir, "novelty", score)
 
 
 def stream_conversation_filter(
@@ -402,29 +303,14 @@ def stream_conversation_filter(
 
     from dbt_meshify_spark.operators.text import conversation_stats
 
-    spark = stream_docs.sparkSession
-    kept = (
-        conversation_stats(stream_docs, json_col=json_col)
-        .filter(F.col("is_valid"))
-        .select("doc_id", "n_turns", "total_chars")
-    )
-    q = (
-        kept.writeStream.format("parquet")
-        .option("path", f"{out_dir}/rows")
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
+    def keep(batch_df: DataFrame) -> DataFrame:
+        return (
+            conversation_stats(batch_df, json_col=json_col)
+            .filter(F.col("is_valid"))
+            .select("doc_id", "n_turns", "total_chars")
+        )
 
-    # FILE sink: explicit schema for the zero-batch _spark_metadata-only
-    # directory (r13 review; see stream_gopher_filter)
-    sink_schema = "doc_id bigint, n_turns bigint, total_chars bigint"
-    rows = read_sink_or_none(spark, f"{out_dir}/rows", schema=sink_schema)
-    if rows is None:
-        return spark.createDataFrame([], sink_schema)
-    return rows
+    return drain(stream_docs, out_dir, "rows", keep)
 
 
 def stream_cms_heavy_hitters(
@@ -438,7 +324,7 @@ def stream_cms_heavy_hitters(
 ) -> DataFrame:
     """Streaming token-frequency monitor on count-min state: every arriving
     micro-batch reduces to its OWN sketch cells (<= depth*width rows
-    appended per batch — operators/sketches.py::cms_sketch) and the merged
+    committed per batch — operators/sketches.py::cms_sketch) and the merged
     sketch is their cell-wise sum, the mergeability
     test_cms_sketch_merges_across_shards proves. State on disk grows with
     batches x depth*width, never with tokens — the fixed-memory property
@@ -458,37 +344,21 @@ def stream_cms_heavy_hitters(
         heavy_hitters_from_cells,
     )
 
-    spark = stream_docs.sparkSession
-
-    def build(batch_df: DataFrame, batch_id: int) -> None:
-        # keyed by batch_id and OVERWRITTEN, not blind-appended: foreachBatch
-        # is at-least-once (a crash between this write and the checkpoint
-        # commit replays the batch), and the oracle equality below needs the
-        # merged cell sums exactly once per batch — a replay lands on the
-        # same directory instead of double-counting
+    def build(batch_df: DataFrame) -> DataFrame:
         toks = batch_df.select(
             F.explode(tokens_col(F.col(text_col))).alias("token")
         )
-        cms_sketch(toks, "token", depth, width).write.mode("overwrite").parquet(
-            f"{out_dir}/cells/batch={batch_id}"
-        )
+        return cms_sketch(toks, "token", depth, width)
 
-    q = (
-        stream_docs.writeStream.foreachBatch(build)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    # the oracle equality needs each batch's cells summed exactly once —
+    # the drain's batch-keyed overwrite makes a replayed batch land on its
+    # own directory instead of double-counting
+    cells = (
+        drain(stream_docs, out_dir, "cells", build)
+        .groupBy("r", "b")
+        .agg(F.sum("c").alias("c"))
+        .collect()
     )
-    q.awaitTermination()
-    # Zero micro-batches => out_dir/cells was never written; an empty cell
-    # list is the correct merged state (stream_conversation_filter pattern).
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
-
-    sink = read_sink_or_none(spark, f"{out_dir}/cells")
-    if sink is None:
-        cells = []
-    else:
-        cells = sink.groupBy("r", "b").agg(F.sum("c").alias("c")).collect()
     truth = corpus_df.select(
         F.explode(tokens_col(F.col(text_col))).alias("token")
     )
@@ -507,9 +377,8 @@ def stream_weighted_sample(
 ) -> DataFrame:
     """Live weighted sampling without replacement over an ingest: every
     micro-batch keeps only its own Efraimidis-Spirakis top-k candidates
-    (<= k rows appended per batch, batch-keyed overwrite — idempotent
-    under foreachBatch replay like stream_cms_heavy_hitters), and the
-    final sample re-ranks the union.
+    (<= k rows committed per batch, batch-keyed overwrite — idempotent
+    under foreachBatch replay), and the final sample re-ranks the union.
 
     Exactness, not approximation: the ES key u^(1/w) is row-INTRINSIC
     (deterministic md5 uniform of the row key), so the global top-k is
@@ -525,11 +394,10 @@ def stream_weighted_sample(
 
     from dbt_meshify_spark.operators.sampling import _md5_uniform
 
-    spark = stream_docs.sparkSession
     u = _md5_uniform(key_cols, seed)
 
-    def pick(batch_df: DataFrame, batch_id: int) -> None:
-        keyed = (
+    def pick(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(F.col(weight_col) > 0)
             .withColumn(
                 "es_key", F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double"))
@@ -537,25 +405,8 @@ def stream_weighted_sample(
             .orderBy(F.col("es_key").desc(), *[F.col(c) for c in key_cols])
             .limit(k)
         )
-        keyed.write.mode("overwrite").parquet(f"{out_dir}/cands/batch={batch_id}")
 
-    q = (
-        stream_docs.writeStream.foreachBatch(pick)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # Zero micro-batches => out_dir/cands was never written; return an empty
-    # typed frame with the output schema instead of letting the read raise.
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
-
-    cands = read_sink_or_none(spark, f"{out_dir}/cands")
-    if cands is None:
-        empty = spark.createDataFrame([], stream_docs.schema)
-        return empty.withColumn("es_key", F.lit(None).cast("double")).withColumn(
-            "draw_rank", F.lit(None).cast("int")
-        )
+    cands = drain(stream_docs, out_dir, "cands", pick)
     topk = cands.orderBy(
         F.col("es_key").desc(), *[F.col(c) for c in key_cols]
     ).limit(k)
@@ -580,38 +431,12 @@ def stream_classifier_filter(
     """
     from dbt_meshify_spark.operators.classifier import classify_documents
 
-    spark = stream_docs.sparkSession
     # train ONCE: pin the bounded weight table before the stream starts —
     # an uncached lazy frame would re-execute the whole training job
     # (corpus tokenize + shuffle + top-k) inside EVERY foreachBatch call
     weights = weights.localCheckpoint()
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        out = classify_documents(batch_df, weights, threshold=threshold)
-        # batch_id-keyed OVERWRITE, not blind append: foreachBatch is
-        # at-least-once (the stream_cms_heavy_hitters discipline) — a
-        # replayed batch lands on the same directory instead of
-        # duplicating its per-doc verdicts
-        out.write.mode("overwrite").parquet(f"{out_dir}/scored/batch={batch_id}")
+    def score(batch_df: DataFrame) -> DataFrame:
+        return classify_documents(batch_df, weights, threshold=threshold)
 
-    q = (
-        stream_docs.writeStream.foreachBatch(score)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # PATH_NOT_FOUND check, not a blanket except: a zero-micro-batch drain
-    # is the only legitimate empty case — a corrupted batch directory must
-    # RAISE, not masquerade as an empty corpus
-    from dbt_meshify_spark.streaming.sinks import read_sink_or_none
-
-    scored = read_sink_or_none(spark, f"{out_dir}/scored")
-    if scored is None:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, n_tokens bigint, n_known bigint, "
-            "score double, label boolean",
-        )
-    # drop the batch=N partition column the keyed layout introduces
-    return scored.drop("batch")
+    return drain(stream_docs, out_dir, "scored", score)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dbt_meshify_spark.streaming.sinks import read_sink_or_none
+from dbt_meshify_spark.streaming.sinks import drain
 
 EVENT_SCHEMA_NANOS = T.StructType(
     [
@@ -550,7 +550,7 @@ def stream_quantile_sketch(
 ) -> DataFrame:
     """Streaming value-distribution monitor on fixed-grid quantile state:
     every micro-batch reduces to its OWN grid cells (<= width rows per key
-    appended per batch — operators/sketches.py::quantile_sketch_cells,
+    committed per batch — operators/sketches.py::quantile_sketch_cells,
     batch-keyed OVERWRITE so an at-least-once foreachBatch replay lands on
     the same directory instead of double-counting) and the merged sketch is
     the cell-wise sum. State on disk grows with batches x width cells,
@@ -568,20 +568,14 @@ def stream_quantile_sketch(
         quantile_sketch_cells,
     )
 
-    spark = stream_events.sparkSession
+    def build(batch_df: DataFrame) -> DataFrame:
+        return quantile_sketch_cells(batch_df, key_cols, value_col, lo, hi, width)
 
-    def build(batch_df: DataFrame, batch_id: int) -> None:
-        quantile_sketch_cells(
-            batch_df, key_cols, value_col, lo, hi, width
-        ).write.mode("overwrite").parquet(f"{out_dir}/cells/batch={batch_id}")
-
-    q = (
-        stream_events.writeStream.foreachBatch(build)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    cells = (
+        drain(stream_events, out_dir, "cells", build)
+        .groupBy(*key_cols, "b")
+        .agg(F.sum("c").alias("c"))
     )
-    q.awaitTermination()
     # same pre-filter contract as the batch wrapper: NULL AND NaN excluded
     # (quantile_report_from_cells requires it; the per-batch cells builder
     # already NaN-filters, so the audit frame must match)
@@ -589,15 +583,6 @@ def stream_quantile_sketch(
         F.col(value_col).isNotNull()
         & ~F.isnan(F.col(value_col).cast("double"))
     )
-    sink = read_sink_or_none(spark, f"{out_dir}/cells")
-    if sink is None:
-        cells = spark.createDataFrame(
-            [], data.select(*key_cols).schema
-        ).withColumns(
-            {"b": F.lit(None).cast("int"), "c": F.lit(None).cast("bigint")}
-        )
-    else:
-        cells = sink.groupBy(*key_cols, "b").agg(F.sum("c").alias("c"))
     return quantile_report_from_cells(
         cells, data, key_cols, value_col, qs, lo, hi, width
     )
@@ -623,29 +608,16 @@ def stream_l_diversity(
     """
     from dbt_meshify_spark.operators.privacy import l_diversity_from_counts
 
-    spark = stream_df.sparkSession
-
-    def build(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.groupBy(*quasi_cols, sensitive_col).agg(
+    def build(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(*quasi_cols, sensitive_col).agg(
             F.count("*").cast("bigint").alias("__cnt")
-        ).write.mode("overwrite").parquet(f"{out_dir}/cells/batch={batch_id}")
-
-    q = (
-        stream_df.writeStream.foreachBatch(build)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = read_sink_or_none(spark, f"{out_dir}/cells")
-    if sink is None:
-        sv = spark.createDataFrame(
-            [], stream_df.select(*quasi_cols, sensitive_col).schema
-        ).withColumn("__cnt", F.lit(None).cast("bigint"))
-    else:
-        sv = sink.groupBy(*quasi_cols, sensitive_col).agg(
-            F.sum("__cnt").cast("bigint").alias("__cnt")
         )
+
+    sv = (
+        drain(stream_df, out_dir, "cells", build)
+        .groupBy(*quasi_cols, sensitive_col)
+        .agg(F.sum("__cnt").cast("bigint").alias("__cnt"))
+    )
     return l_diversity_from_counts(sv, quasi_cols, sensitive_col, l, c)
 
 
@@ -673,27 +645,10 @@ def stream_dp_noisy_counts(
     """
     from dbt_meshify_spark.operators.privacy import dp_noisy_user_counts
 
-    spark = stream_df.sparkSession
+    def build(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(*group_cols, user_col).distinct()
 
-    def build(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(*group_cols, user_col).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/pairs/batch={batch_id}")
-
-    q = (
-        stream_df.writeStream.foreachBatch(build)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = read_sink_or_none(spark, f"{out_dir}/pairs")
-    if sink is None:
-        pairs = spark.createDataFrame(
-            [], stream_df.select(*group_cols, user_col).schema
-        )
-    else:
-        pairs = sink.select(*group_cols, user_col)
+    pairs = drain(stream_df, out_dir, "pairs", build)
     # the BATCH mechanism runs on the merged pairs — one release path, so
     # the streaming twin cannot drift from the oracle (countDistinct over
     # the pair union also skips NULL users exactly like the batch twin;
@@ -731,8 +686,6 @@ def stream_weighted_quantile(
         weighted_quantile_from_cells,
     )
 
-    spark = stream_df.sparkSession
-
     def normalized(frame: DataFrame) -> DataFrame:
         return frame.filter(
             F.col(value_col).isNotNull()
@@ -745,30 +698,20 @@ def stream_weighted_quantile(
             F.ceil(F.col(weight_col)).cast("bigint").alias("__w"),
         )
 
-    def build(batch_df: DataFrame, batch_id: int) -> None:
-        data = normalized(batch_df)
+    def build(batch_df: DataFrame) -> DataFrame:
         b = _grid_bucket(F.col("__v"), lo, hi, width)
-        data.groupBy(*key_cols, b.alias("b")).agg(
-            F.sum("__w").cast("bigint").alias("c")
-        ).write.mode("overwrite").parquet(f"{out_dir}/cells/batch={batch_id}")
-
-    q = (
-        stream_df.writeStream.foreachBatch(build)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    audit = normalized(corpus_df)
-    sink = read_sink_or_none(spark, f"{out_dir}/cells")
-    if sink is None:
-        cells = spark.createDataFrame(
-            [], audit.select(*key_cols).schema
-        ).withColumns(
-            {"b": F.lit(None).cast("int"), "c": F.lit(None).cast("bigint")}
+        return (
+            normalized(batch_df)
+            .groupBy(*key_cols, b.alias("b"))
+            .agg(F.sum("__w").cast("bigint").alias("c"))
         )
-    else:
-        cells = sink.groupBy(*key_cols, "b").agg(F.sum("c").alias("c"))
+
+    cells = (
+        drain(stream_df, out_dir, "cells", build)
+        .groupBy(*key_cols, "b")
+        .agg(F.sum("c").alias("c"))
+    )
+    audit = normalized(corpus_df)
     return weighted_quantile_from_cells(
         cells, audit, key_cols, qs, lo, hi, width
     )

@@ -946,9 +946,9 @@ def streaming_probe(spark, sf_dir: str) -> None:
     a live ingest's would."""
     import os
     import shutil
-    import tempfile
     import time as _t
 
+    from dbt_meshify_spark.queries.extensions import _stream_scratch
     from dbt_meshify_spark.sources import load_table
     from dbt_meshify_spark.streaming.documents import (
         read_documents_stream,
@@ -961,7 +961,9 @@ def streaming_probe(spark, sf_dir: str) -> None:
         stream_stream_join_clicks_to_purchases,
     )
 
-    root = tempfile.mkdtemp(prefix="stream_probe_")
+    # under the per-process scratch root, so a crashed probe's leftovers are
+    # reclaimed by the next session's dead-PID sweep
+    root = _stream_scratch("stream_probe_")
     base_docs = load_table(spark, sf_dir, "documents")
 
     def scaled(base, k: int, shift_col: str, shift: int):

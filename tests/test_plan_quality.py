@@ -1045,6 +1045,7 @@ def test_stop_gram_caps_are_broadcast_anti_drop_joins(spark):
         winnow_overlap_pairs(docs, max_print_df=10_000, _pin=False)
     )
     assert "LeftAnti" in plan, "print cap regressed to a keep-list join"
+    assert "SortMergeJoin" not in plan, "print drop list not broadcast"
 
 
 def test_embedding_neardup_lsh_scores_each_pair_once(spark):

@@ -1395,18 +1395,36 @@ def test_tumbling_window_resumes_from_checkpoint(spark, tmp_path_factory):
 
 
 def test_file_sink_zero_batch_drain_returns_typed_empty(spark, tmp_path_factory):
-    """A FILE-sink monitor drained over an EMPTY input directory must
-    return its typed empty frame, not raise: the parquet file sink creates
-    {out}/rows/_spark_metadata eagerly at query start, so the zero-batch
-    directory exists but holds no data files — the read-back must pass an
-    explicit schema to skip inference (r13 review; empirically UNABLE_TO_
-    INFER without it). Covers both file-sink monitors."""
+    """Every drained monitor run over an EMPTY input directory must return
+    its typed empty result, not raise: no micro-batch ever commits, so the
+    sink directory is never created and the drain builds the result from
+    the monitor's per-batch plan over an empty frame. Aggregate reports
+    over the empty state come out typed as well (PSI keeps its fixed
+    bucket spine)."""
     import os
 
+    from dbt_meshify_spark.operators.classifier import train_nb_weights
+    from dbt_meshify_spark.operators.dedup import minhash_index
+    from dbt_meshify_spark.operators.text import quality_score
     from dbt_meshify_spark.streaming.documents import (
         read_documents_stream,
+        stream_classifier_filter,
+        stream_cms_heavy_hitters,
         stream_conversation_filter,
+        stream_decontaminate,
         stream_gopher_filter,
+        stream_gram_novelty,
+        stream_neardup_against_index,
+        stream_quality_psi,
+        stream_self_repetition,
+        stream_weighted_sample,
+    )
+    from dbt_meshify_spark.streaming.events import (
+        read_events_stream,
+        stream_dp_noisy_counts,
+        stream_l_diversity,
+        stream_quantile_sketch,
+        stream_weighted_quantile,
     )
 
     base = tmp_path_factory.mktemp("zerobatch")
@@ -1425,6 +1443,103 @@ def test_file_sink_zero_batch_drain_returns_typed_empty(spark, tmp_path_factory)
     out2 = stream_conversation_filter(feed2, str(base / "c"))
     assert out2.count() == 0
     assert out2.columns == ["doc_id", "n_turns", "total_chars"]
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    sigs, bands = minhash_index(docs, num_hashes=16, bands=8, hash_fn="md5")
+    weights = train_nb_weights(
+        docs.withColumn("is_en", F.col("lang") == F.lit("en")), "is_en"
+    )
+
+    def dfeed():
+        return read_documents_stream(spark, str(empty_in))
+
+    def efeed():
+        return read_events_stream(spark, str(empty_in), nanos=False)
+
+    events = load_table(spark, SF_SMOKE, "events")
+    cases = [
+        (
+            lambda o: stream_neardup_against_index(
+                dfeed(), bands, sigs, o, num_hashes=16, bands=8, hash_fn="md5"
+            ),
+            ["new_id", "dup_of", "jaccard_est"],
+            0,
+        ),
+        (
+            lambda o: stream_quality_psi(
+                dfeed(), quality_score(docs).select("doc_id", "quality"), o
+            ),
+            ["bucket", "n_old", "n_new", "p_old", "p_new", "psi_term", "psi_total"],
+            10,
+        ),
+        (
+            lambda o: stream_decontaminate(dfeed(), docs, o),
+            ["doc_id", "n_grams", "matched", "overlap", "contaminated"],
+            0,
+        ),
+        (
+            lambda o: stream_self_repetition(dfeed(), o),
+            ["doc_id", "clean_text", "n_tokens_kept", "n_tokens_removed"],
+            0,
+        ),
+        (
+            lambda o: stream_gram_novelty(dfeed(), docs, o),
+            ["doc_id", "n_grams", "n_novel", "novelty"],
+            0,
+        ),
+        (
+            lambda o: stream_cms_heavy_hitters(dfeed(), docs.limit(0), o),
+            ["token", "cms_est", "true_count", "overcount"],
+            0,
+        ),
+        (
+            lambda o: stream_weighted_sample(
+                dfeed(), o, k=5, weight_col="n_chars", key_cols=["doc_id"]
+            ),
+            docs.columns + ["es_key", "draw_rank"],
+            0,
+        ),
+        (
+            lambda o: stream_classifier_filter(dfeed(), weights, o),
+            ["doc_id", "n_tokens", "n_known", "score", "label"],
+            0,
+        ),
+        (
+            lambda o: stream_quantile_sketch(
+                efeed(), events.limit(0), o, ["event_type"], "value",
+                [0.5], 0.0, 512.0, 128,
+            ),
+            ["event_type", "q", "n", "est_q", "true_q", "abs_err"],
+            0,
+        ),
+        (
+            lambda o: stream_l_diversity(efeed(), o, ["event_type"], "user_id"),
+            [
+                "event_type", "group_size", "n_sensitive", "top_count",
+                "max_share", "entropy", "at_risk_distinct", "at_risk_recursive",
+            ],
+            0,
+        ),
+        (
+            lambda o: stream_dp_noisy_counts(
+                efeed().select("event_type", "user_id"), o, ["event_type"]
+            ),
+            ["event_type", "n_true", "noise", "n_released"],
+            0,
+        ),
+        (
+            lambda o: stream_weighted_quantile(
+                dfeed(), docs.limit(0), o, ["lang"], "n_chars", "n_chars",
+                [0.5], 0.0, 1024.0, 128,
+            ),
+            ["lang", "q", "total_w", "est_q", "true_q", "abs_err"],
+            0,
+        ),
+    ]
+    for i, (monitor, columns, n_rows) in enumerate(cases):
+        out = monitor(str(base / f"m{i}"))
+        assert out.columns == columns, i
+        assert out.count() == n_rows, i
 
 
 def test_sized_batch_width_tracks_volume_with_floor_and_cap(spark, tmp_path):
@@ -1450,3 +1565,72 @@ def test_sized_batch_width_tracks_volume_with_floor_and_cap(spark, tmp_path):
     assert sized_batch_width(spark, str(huge)) == max(width, 8)
     # missing path -> session width (no-op pin)
     assert sized_batch_width(spark, str(tmp_path / "nope")) == width
+
+
+def _conversation_feed(feed):
+    from dbt_meshify_spark.queries.extensions import _CONV_SYNTH
+
+    return feed.filter(F.col("text").isNotNull()).withColumn(
+        "conversation", F.expr(_CONV_SYNTH)
+    )
+
+
+@pytest.mark.parametrize(
+    "monitor",
+    [
+        "stream_decontaminate",
+        "stream_self_repetition",
+        "stream_gram_novelty",
+        "stream_quality_psi",
+        "stream_gopher_filter",
+        "stream_conversation_filter",
+    ],
+)
+def test_stateless_monitor_noop_resume_returns_same_rows(
+    spark, tmp_path_factory, monitor
+):
+    """A resumed drain that finds no new input must return everything the
+    first drain committed: the monitor's result is read back from the sink,
+    not from state held by the process that ran the batches."""
+    from dbt_meshify_spark.operators.text import quality_score
+    from dbt_meshify_spark.streaming import documents
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    calls = {
+        "stream_decontaminate": lambda feed, o: documents.stream_decontaminate(
+            feed, docs.filter(F.col("doc_id") % 20 == 0), o
+        ),
+        "stream_self_repetition": documents.stream_self_repetition,
+        "stream_gram_novelty": lambda feed, o: documents.stream_gram_novelty(
+            feed, docs.filter(F.col("doc_id") % 2 == 0), o
+        ),
+        "stream_quality_psi": lambda feed, o: documents.stream_quality_psi(
+            feed, quality_score(docs).select("doc_id", "quality"), o
+        ),
+        # the generated corpus has too few stopwords to pass the Gopher
+        # rules; a stopword prefix makes most documents survive
+        "stream_gopher_filter": lambda feed, o: documents.stream_gopher_filter(
+            feed.withColumn(
+                "text", F.concat(F.lit("the cat and the dog went to "), "text")
+            ),
+            o,
+            min_words=30,
+        ),
+        "stream_conversation_filter": lambda feed, o: (
+            documents.stream_conversation_filter(_conversation_feed(feed), o)
+        ),
+    }
+    d = tmp_path_factory.mktemp(f"{monitor}_in")
+    docs.filter(F.col("doc_id") < 250).coalesce(1).write.parquet(str(d / "f1"))
+    out_dir = str(tmp_path_factory.mktemp(f"{monitor}_out"))
+
+    def drain():
+        feed = documents.read_documents_stream(
+            spark, str(d) + "/*/", max_files_per_trigger=1
+        )
+        out = calls[monitor](feed, out_dir)
+        return sorted(tuple(str(v) for v in r) for r in out.collect())
+
+    first = drain()
+    assert len(first) > 0
+    assert drain() == first
