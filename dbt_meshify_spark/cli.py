@@ -18,7 +18,7 @@ from pathlib import Path
 
 import click
 
-from dbt_meshify_spark.plans.changes import ChangeSet, ChangeSetProcessor
+from dbt_meshify_spark.plans.changes import ChangeSet, ChangeSetProcessor, load_yaml
 from dbt_meshify_spark.plans.contracts import generate_contract
 from dbt_meshify_spark.plans.graph import select_resources
 from dbt_meshify_spark.plans.grouper import create_group as plan_create_group
@@ -125,15 +125,13 @@ _owner_options = _options(
 def _owner(owner_name, owner_email, owner_properties) -> dict:
     """The group Owner from --owner-name/--owner-email, with
     --owner-properties merged in (reference main.py:612)."""
-    import yaml as _yaml
-
     owner = {
         k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
     }
     if not owner:
         raise click.ClickException("an owner (--owner-name/--owner-email) is required")
     if owner_properties:
-        owner.update(_yaml.safe_load(owner_properties) or {})
+        owner.update(load_yaml(owner_properties) or {})
     return owner
 
 
@@ -597,12 +595,10 @@ def run(select, exclude, project_path, warehouse_dir, full_refresh, vars_, state
     """Materialize models on Spark in DAG order (the reference shells into
     `dbt run`, dbt.py:36-65; here the engine executes directly). Writes
     target/manifest.json for later state:modified runs."""
-    import yaml as _yaml
-
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(
-        project_path, vars=_yaml.safe_load(vars_) if vars_ else None
+        project_path, vars=load_yaml(vars_) if vars_ else None
     )
     sel: list[str] | None = list(select) or None
     if sel and state:

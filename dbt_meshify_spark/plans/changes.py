@@ -12,12 +12,31 @@ Behavioral parity targets (reference, cited for the judge):
 - File managers with empty-collection pruning + delete-when-empty:
   file_manager.py:47-147, file_content_editors.py:219-244.
 
+One YAML codec serves the whole package: ``load_yaml``/``dump_yaml`` use
+libyaml's C loader and emitter when PyYAML was built with it, and the
+pure-Python classes of the same safe schema otherwise.
+
+Parse once, write once: within one ``ChangeSetProcessor.process`` call a
+property file is parsed on the first resource change that touches it.
+Every later resource change for that path is applied to the parsed
+document in memory; ``ResourceFileEditor.update``/``remove`` are pure
+transforms from one document to the next. A document whose last resource
+is removed becomes a pending unlink. Pending documents are flushed (written
+or unlinked, then forgotten) at two points only:
+
+- before a raw-file or directory change, the pending documents it touches:
+  those whose path equals the change's ``path`` or ``source``, or lies
+  under it as a directory;
+- every remaining one once, when ``process`` returns or raises. A change
+  that raises therefore leaves every earlier change on disk and itself not.
+
 All original code; executes on the driver (file + catalog mutations are
 bounded metadata, never data-plane work).
 """
 
 from __future__ import annotations
 
+import copy
 import shutil
 from dataclasses import dataclass, field
 from enum import Enum
@@ -215,24 +234,47 @@ def _prune_empty(value: Any) -> Any:
 # --------------------------------------------------------------------------
 
 
+# libyaml's loader/emitter when PyYAML has it; the pure-Python classes are
+# the only path on a PyYAML built without it.
+if yaml.__with_libyaml__:
+    YAML_LOADER, YAML_DUMPER = yaml.CSafeLoader, yaml.CSafeDumper
+else:
+    YAML_LOADER, YAML_DUMPER = yaml.SafeLoader, yaml.SafeDumper
+
+# what write_yaml emits every property file with
+WRITE_OPTIONS = {"sort_keys": False, "width": 100, "allow_unicode": True}
+
+
+def load_yaml(text: str) -> Any:
+    return yaml.load(text, Loader=YAML_LOADER)
+
+
+def dump_yaml(doc: Any, **opts: Any) -> str:
+    return yaml.dump(doc, Dumper=YAML_DUMPER, **opts)
+
+
 def read_yaml(path: Path) -> dict:
     if not path.exists():
         return {}
-    return yaml.safe_load(path.read_text()) or {}
+    return load_yaml(path.read_text()) or {}
 
 
 def write_yaml(path: Path, doc: dict) -> None:
     path.parent.mkdir(parents=True, exist_ok=True)
-    path.write_text(
-        yaml.safe_dump(_prune_empty(doc), sort_keys=False, width=100, allow_unicode=True)
-    )
+    path.write_text(dump_yaml(_prune_empty(doc), **WRITE_OPTIONS))
 
 
 class ResourceFileEditor:
     """Structured YAML patching: update/remove a named entry inside a
-    property file, handling source-table nesting and deleting the file when
-    its last resource is removed (reference file_content_editors.py:96-244,
-    dbt_project_editors.py:354-389)."""
+    property-file document, handling source-table nesting and reporting when
+    the last resource is gone so the file can be deleted (reference
+    file_content_editors.py:96-244, dbt_project_editors.py:354-389).
+
+    Both operations are pure: they work on a deep copy of ``doc`` (which
+    keeps any anchor-shared objects shared, as a fresh parse would) and
+    return the next document pruned as ``write_yaml`` writes it, so an
+    in-memory chain of edits equals one that re-reads the file between
+    them, and a failed edit changes nothing."""
 
     def __init__(self, entity_type: EntityType) -> None:
         self.entity_type = entity_type
@@ -240,8 +282,8 @@ class ResourceFileEditor:
     def _section(self) -> str:
         return self.entity_type.pluralized
 
-    def update(self, path: Path, identifier: str, patch: dict) -> None:
-        doc = read_yaml(path)
+    def update(self, doc: dict, identifier: str, patch: dict) -> dict:
+        doc = copy.deepcopy(doc)
         doc.setdefault("version", 2)
         section = doc.get(self._section()) or []
         entries = named_list_to_dict(section)
@@ -270,10 +312,12 @@ class ResourceFileEditor:
             safe_update(entries[identifier], patch)
             entries[identifier] = format_resource(entries[identifier])
         doc[self._section()] = self._to_list(entries)
-        write_yaml(path, doc)
+        return _prune_empty(doc)
 
-    def remove(self, path: Path, identifier: str) -> None:
-        doc = read_yaml(path)
+    def remove(self, doc: dict, identifier: str) -> dict | None:
+        """The document without ``identifier``, or None when no resource is
+        left in it (delete-file-when-empty)."""
+        doc = copy.deepcopy(doc)
         entries = named_list_to_dict(doc.get(self._section()) or [])
         if self.entity_type == EntityType.Source and "." in identifier:
             src_name, table_name = identifier.split(".", 1)
@@ -293,10 +337,7 @@ class ResourceFileEditor:
             for k, v in doc.items()
             if k != "version" and v not in (None, [], {})
         ]
-        if not remaining:
-            path.unlink(missing_ok=True)
-        else:
-            write_yaml(path, doc)
+        return _prune_empty(doc) if remaining else None
 
     @staticmethod
     def _to_list(entries: dict) -> list:
@@ -373,7 +414,8 @@ class ChangeSetProcessorException(Exception):
 
 class ChangeSetProcessor:
     """Ordered, logged, dry-run-able execution (reference
-    change_set_processor.py:24-61)."""
+    change_set_processor.py:24-61) that parses and writes each property file
+    at most once per ``process`` call (module docstring)."""
 
     def __init__(self, dry_run: bool = False, log: Callable[[str], None] = print) -> None:
         self.dry_run = dry_run
@@ -382,30 +424,77 @@ class ChangeSetProcessor:
     def process(self, change_sets: list[ChangeSet]) -> None:
         step = 0
         total = sum(len(cs) for cs in change_sets)
-        for cs in change_sets:
-            for change in cs:
-                step += 1
-                self.log(f"[{step}/{total}] {change.describe()}")
-                if self.dry_run:
-                    continue
-                try:
-                    self._apply(change)
-                except Exception as e:
-                    raise ChangeSetProcessorException(change, e) from e
+        pending = _PendingDocs()
+        try:
+            for cs in change_sets:
+                for change in cs:
+                    step += 1
+                    self.log(f"[{step}/{total}] {change.describe()}")
+                    if self.dry_run:
+                        continue
+                    try:
+                        self._apply(change, pending)
+                    except ChangeSetProcessorException:
+                        raise  # an earlier change's document failed to write
+                    except Exception as e:
+                        raise ChangeSetProcessorException(change, e) from e
+        finally:
+            pending.flush()
 
-    def _apply(self, change: Change) -> None:
+    def _apply(self, change: Change, pending: _PendingDocs) -> None:
         if change.entity_type == EntityType.Directory:
+            pending.flush(change)
             DirectoryEditor.apply(change)
         elif change.entity_type == EntityType.Code or isinstance(change.data, str) or (
             change.data is None and change.operation in (Operation.Copy, Operation.Move, Operation.Remove)
             and change.path.suffix != ".yml"
         ):
+            pending.flush(change)
             RawFileEditor.apply(change)
         else:
             editor = ResourceFileEditor(change.entity_type)
             if change.operation in (Operation.Add, Operation.Update, Operation.Append):
-                editor.update(change.path, change.identifier, change.data or {})
+                doc = editor.update(
+                    pending.get(change.path), change.identifier, change.data or {}
+                )
             elif change.operation == Operation.Remove:
-                editor.remove(change.path, change.identifier)
+                doc = editor.remove(pending.get(change.path), change.identifier)
             else:
                 raise ValueError(f"unsupported resource op {change.operation}")
+            pending.put(change.path, doc, change)
+
+
+class _PendingDocs:
+    """Property-file documents edited in memory during one ``process`` call,
+    keyed by resolved path; a None document is a pending unlink."""
+
+    def __init__(self) -> None:
+        self.docs: dict[Path, tuple[dict | None, Change]] = {}
+
+    def get(self, path: Path) -> dict:
+        key = path.resolve()
+        if key in self.docs:
+            return self.docs[key][0] or {}
+        return read_yaml(key)
+
+    def put(self, path: Path, doc: dict | None, change: Change) -> None:
+        self.docs[path.resolve()] = (doc, change)
+
+    def flush(self, change: Change | None = None) -> None:
+        """Write or unlink, then forget, the documents ``change`` touches
+        (its path or source is the document's path or a directory above
+        it); every document when ``change`` is None."""
+        if change is None:
+            keys = list(self.docs)
+        else:
+            bounds = [p.resolve() for p in (change.path, change.source) if p is not None]
+            keys = [k for k in self.docs if any(b == k or b in k.parents for b in bounds)]
+        for key in keys:
+            doc, last = self.docs.pop(key)
+            try:
+                if doc is None:
+                    key.unlink(missing_ok=True)
+                else:
+                    write_yaml(key, doc)
+            except Exception as e:
+                raise ChangeSetProcessorException(last, e) from e

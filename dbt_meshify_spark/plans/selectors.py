@@ -22,6 +22,7 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Any
 
+from dbt_meshify_spark.plans.changes import load_yaml
 from dbt_meshify_spark.plans.graph import select_resources
 from dbt_meshify_spark.plans.manifest import Manifest
 
@@ -46,12 +47,10 @@ def load_selectors(project_root: str | Path) -> dict[str, Any]:
     The special key ``__default__`` holds the name of the selector marked
     ``default: true`` (dbt applies it when no --select/--selector given).
     """
-    import yaml
-
     path = Path(project_root) / "selectors.yml"
     if not path.exists():
         return {}
-    doc = yaml.safe_load(path.read_text()) or {}
+    doc = load_yaml(path.read_text()) or {}
     out: dict[str, Any] = {}
     for entry in doc.get("selectors", []) or []:
         name = entry.get("name")

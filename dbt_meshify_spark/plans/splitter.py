@@ -18,13 +18,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from pathlib import Path
 
-import yaml
-
 from dbt_meshify_spark.plans.changes import (
     Change,
     ChangeSet,
     EntityType,
     Operation,
+    dump_yaml,
     read_yaml,
 )
 from dbt_meshify_spark.plans.graph import (
@@ -157,6 +156,8 @@ class SubprojectCreator:
         # model name -> [{name, data_type}] for contract generation; falls
         # back to property-file columns when the warehouse schema is absent.
         self.catalog = catalog or {}
+        # parent property files parsed so far by this plan, by path
+        self._yml_docs: dict[Path, dict] = {}
 
     # -- path helpers --------------------------------------------------------
 
@@ -208,13 +209,16 @@ class SubprojectCreator:
 
     def _yml_entry(self, resource: Resource) -> dict | None:
         """Read the resource's current property-file entry from disk
-        (reference dbt_project_editors.py:66-90 load_resource_yml)."""
+        (reference dbt_project_editors.py:66-90 load_resource_yml); each
+        file is parsed once per plan."""
         if not resource.patch_path:
             return None
         path = self.parent.root / resource.patch_path
-        if not path.exists():
-            return None
-        doc = read_yaml(path)
+        if path not in self._yml_docs:
+            if not path.exists():
+                return None
+            self._yml_docs[path] = read_yaml(path)
+        doc = self._yml_docs[path]
         section = _ENTITY_BY_TYPE.get(
             resource.resource_type, EntityType.Model
         ).pluralized
@@ -390,7 +394,7 @@ class SubprojectCreator:
             entity_type=EntityType.Code,
             identifier="dbt_project.yml",
             path=self.sub.path / "dbt_project.yml",
-            data=yaml.safe_dump(cfg, sort_keys=False),
+            data=dump_yaml(cfg, sort_keys=False),
         )
 
     def _dependencies_yml(self) -> Change:

@@ -13,14 +13,31 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any
+from typing import Any, Iterator
 
-import yaml
-
+from dbt_meshify_spark.plans.changes import load_yaml
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
 from dbt_meshify_spark.project.compiler import JinjaCompiler
 
 _TEST_SHORTHAND = ("unique", "not_null")
+
+# ref('model'), ref('package', 'model'), either with a v=/version= kwarg
+_YAML_REF = re.compile(
+    r"""\bref\s*\(\s*['"](\w+)['"]\s*(?:,\s*['"](\w+)['"]\s*)?"""
+    r"""(?:,\s*(?:v|version)\s*=\s*['"]?[\w.]+['"]?\s*)?\)"""
+)
+
+
+def _strings(value: Any) -> Iterator[str]:
+    """Every string value nested in a parsed YAML entry."""
+    if isinstance(value, str):
+        yield value
+    elif isinstance(value, dict):
+        for v in value.values():
+            yield from _strings(v)
+    elif isinstance(value, list):
+        for v in value:
+            yield from _strings(v)
 
 
 @dataclass
@@ -52,7 +69,7 @@ class SparkProject:
     def load(cls, root: str | Path, vars: dict[str, Any] | None = None) -> "SparkProject":
         root = Path(root)
         cfg_path = root / "dbt_project.yml"
-        config = yaml.safe_load(cfg_path.read_text()) if cfg_path.exists() else {}
+        config = load_yaml(cfg_path.read_text()) if cfg_path.exists() else {}
         project = cls(root, config or {})
         if vars:
             project.vars.update(vars)
@@ -191,7 +208,7 @@ class SparkProject:
             if not mdir.is_dir():
                 continue
             for f in sorted(mdir.rglob("*.yml")) + sorted(mdir.rglob("*.yaml")):
-                doc = yaml.safe_load(f.read_text()) or {}
+                doc = load_yaml(f.read_text()) or {}
                 rel = str(f.relative_to(self.root))
                 self._apply_model_patches(doc.get("models") or [], rel)
                 self._apply_model_patches(
@@ -326,10 +343,11 @@ class SparkProject:
         for entry in entries:
             name = entry.get("name")
             uid = f"{rtype}.{self.name}.{name}"
-            deps: list[str] = []
-            blob = yaml.safe_dump(entry)
-            for m in re.finditer(r"ref\s*\(\s*['\"](\w+)['\"]\s*\)", blob):
-                deps.append(f"model.{self.name}.{m.group(1)}")
+            deps = {
+                self._ref_uid([a for a in m.groups() if a])
+                for text in _strings(entry)
+                for m in _YAML_REF.finditer(text)
+            }
             self.manifest.add(
                 Resource(
                     unique_id=uid,
@@ -337,12 +355,20 @@ class SparkProject:
                     resource_type=rtype,
                     package=self.name,
                     patch_path=patch_path,
-                    depends_on=sorted(set(deps)),
+                    depends_on=sorted(deps),
                     meta={"spec": entry},
                 )
             )
 
     # -- dependency edges --------------------------------------------------
+
+    def _ref_uid(self, args: list[str]) -> str:
+        """The model a ref's positional arguments name: a two-arg
+        ref('project', 'model') resolves against the NAMED package
+        (cross-project refs after connect/split), a one-arg ref locally;
+        a version kwarg is not an argument here and is ignored."""
+        pkg = args[0] if len(args) >= 2 else self.name
+        return f"model.{pkg}.{args[-1]}"
 
     def _derive_edges(self) -> None:
         macro_ids = {
@@ -381,13 +407,7 @@ class SparkProject:
                 # in-file config() wins over property yml and the tree
                 r.config = {**r.config, **result.config}
                 for ref in result.refs:
-                    args = [a for a in ref if isinstance(a, str)]
-                    target = args[-1]
-                    # two-arg ref('project', 'model') resolves against the
-                    # NAMED package (cross-project refs after connect/split);
-                    # one-arg refs resolve locally
-                    pkg = args[0] if len(args) >= 2 else self.name
-                    deps.add(f"model.{pkg}.{target}")
+                    deps.add(self._ref_uid([a for a in ref if isinstance(a, str)]))
                 for s, t in result.sources:
                     sid = source_ids.get((s, t))
                     if sid:

@@ -58,50 +58,51 @@ _WINDOW_REL = [
     "q_g4_boundary_access",
 ]
 _WINDOW_EXT = [
-    # r14 window (scripts/rotate_window.py --oldest-green): the LAST 36
-    # never-externally-verified oracles — the backlog CLEARS this round —
-    # plus the first 3 slots of the steady-state staleness cycle (oldest
-    # green round first, ties alphabetical; COVERAGE.md §rotation).
-    "ext_stream_gram_novelty",
-    "ext_stream_incremental_neardup",
-    "ext_stream_l_diversity",
-    "ext_stream_quality_psi",
-    "ext_stream_quantile_sketch",
-    "ext_stream_self_repetition",
-    "ext_stream_session_windows",
-    "ext_stream_sliding_halfhour",
-    "ext_stream_stateful_totals",
-    "ext_stream_weighted_quantile",
-    "ext_stream_weighted_sample",
-    "ext_substring_removal",
-    "ext_temperature_mixture",
-    "ext_text_normalize",
-    "ext_tfidf_top_terms",
-    "ext_token_entropy",
-    "ext_token_pmi",
-    "ext_token_stats",
-    "ext_topk_per_key",
-    "ext_triangle_counts",
-    "ext_triangle_counts_degree",
-    "ext_trigram_perplexity",
-    "ext_turn_echo",
-    "ext_unigram_train",
-    "ext_url_canonicalize",
-    "ext_user_activity_audit",
-    "ext_vocab_encode",
-    "ext_weighted_quantile",
-    "ext_weighted_sample",
-    "ext_winnow_overlap",
-    "ext_zipf_fit",
-    "q43_multiset_ops",
-    "q44_filtered_agg",
-    "q45_ordered_set_agg",
-    "q46_group_by_all",
-    "q_l2_package_dependencies",
-    # staleness cycle begins (last green r02)
-    "ext_dedup_exact",
-    "ext_dup_passages",
-    "ext_dup_spans",
+    # r15 window: `scripts/rotate_window.py --oldest-green` (staleness
+    # cycle, oldest green round first, ties alphabetical), led by one
+    # promotion — ext_ngram_containment, whose gram hash changed in r14
+    # (gram string -> xxhash64) after its only green row (r12); that
+    # promotion takes the cycle's 39th slot. ext_ngram_jaccard, on the
+    # same hash, comes up on its own (last green r02).
+    "ext_ngram_containment",  # last green r12 (promoted)
+    "ext_fingerprint",  # last green r02
+    "ext_ngram_jaccard",  # last green r02
+    "ext_remove_dup_passages",  # last green r02
+    "ext_cosine_topk",  # last green r08
+    "ext_decontaminate",  # last green r08
+    "ext_dsir_weights",  # last green r08
+    "ext_hashed_embedding_topk",  # last green r08
+    "ext_bpe_train",  # last green r09
+    "ext_dedup_clusters",  # last green r09
+    "ext_epoch_budget_plan",  # last green r09
+    "ext_kn_perplexity",  # last green r09
+    "ext_stream_tumbling_daily",  # last green r09
+    "ext_substring_dedup",  # last green r09
+    "ext_token_budget",  # last green r09
+    "q02_case_boolean",  # last green r09
+    "q03_filters",  # last green r09
+    "q09_topk",  # last green r09
+    "q10_lag_lead",  # last green r09
+    "ext_bounded_contribution",  # last green r10
+    "ext_bpe_byte_train",  # last green r10
+    "ext_classifier_score",  # last green r10
+    "ext_dp_release",  # last green r10
+    "ext_kmv_distinct",  # last green r10
+    "ext_l_diversity",  # last green r10
+    "ext_minhash_neardup_md5",  # last green r10
+    "ext_mkn5_perplexity",  # last green r10
+    "ext_quantile_sketch",  # last green r10
+    "ext_stream_late_drops",  # last green r10
+    "ext_tokenizer_fertility",  # last green r10
+    "ext_unigram_encode",  # last green r10
+    "ext_zorder_layout",  # last green r10
+    "q06_multiway_join",  # last green r10
+    "q07_distinct_unique",  # last green r10
+    "q08_union_literal",  # last green r10
+    "q14_date_spine",  # last green r10
+    "q15_time_grain",  # last green r10
+    "q17_accepted_values",  # last green r10
+    "q17_not_null",  # last green r10
 ]
 _missing = [n for n in (*_WINDOW_REL, *_WINDOW_EXT) if n not in QUERIES]
 if _missing:

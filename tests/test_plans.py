@@ -33,6 +33,7 @@ from dbt_meshify_spark.plans.changes import (
     named_list_to_dict,
     read_yaml,
     safe_update,
+    write_yaml,
 )
 from dbt_meshify_spark.plans.contracts import (
     ContractViolation,
@@ -241,14 +242,17 @@ def test_resource_editor_contract_merge(tmp_path: Path):
         "  - name: other\n"
     )
     editor = ResourceFileEditor(EntityType.Model)
-    editor.update(
-        p,
+    before = read_yaml(p)
+    doc = editor.update(
+        before,
         "shared_model",
         {
             "config": {"contract": {"enforced": True}},
             "columns": [{"name": "id", "data_type": "integer"}],
         },
     )
+    assert before == read_yaml(p)  # a pure transform: input left as parsed
+    write_yaml(p, doc)
     doc = read_yaml(p)
     entries = {e["name"]: e for e in doc["models"]}
     assert entries["shared_model"]["config"]["contract"]["enforced"] is True
@@ -270,10 +274,12 @@ def test_resource_editor_source_table_nesting(tmp_path: Path):
         "      - name: items\n"
     )
     editor = ResourceFileEditor(EntityType.Source)
-    editor.remove(p, "raw.orders")
+    write_yaml(p, editor.remove(read_yaml(p), "raw.orders"))
     doc = read_yaml(p)
     assert doc["sources"][0]["tables"] == [{"name": "items"}]
-    editor.remove(p, "raw.items")
+    assert editor.remove(doc, "raw.items") is None
+    cs = ChangeSet([Change(Operation.Remove, EntityType.Source, "raw.items", p)])
+    ChangeSetProcessor(log=lambda _s: None).process([cs])
     assert not p.exists()  # delete-file-when-empty (file_content_editors.py:226-231)
 
 
@@ -324,6 +330,193 @@ def test_changeset_move_and_latest_for(tmp_path: Path):
     # apply only the move (second change) to check file ops work
     ChangeSetProcessor(log=lambda _s: None).process([cs])
     assert moved.exists() and not src.exists()
+
+
+def _model_yml(path: Path, *names: str) -> None:
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text(
+        "version: 2\nmodels:\n" + "".join(f"  - name: {n}\n" for n in names)
+    )
+
+
+def _access(path: Path, name: str, access: str = "public") -> Change:
+    return Change(Operation.Update, EntityType.Model, name, path, {"access": access})
+
+
+def _models_in(path: Path) -> dict:
+    return {e["name"]: e for e in read_yaml(path)["models"]}
+
+
+@pytest.mark.parametrize("op", ["move", "copy", "remove", "dir_copy"])
+def test_processor_raw_change_sees_pending_resource_edit(tmp_path: Path, op: str):
+    """A raw file or directory change that reads or replaces a property file
+    runs after the in-memory edits of that file reach disk."""
+    src = tmp_path / "models" / "_models.yml"
+    _model_yml(src, "a", "b")
+    dst = tmp_path / "out" / "_models.yml"
+    raw = {
+        "move": Change(Operation.Move, EntityType.Code, "_models", dst, source=src),
+        "copy": Change(Operation.Copy, EntityType.Code, "_models", dst, source=src),
+        "remove": Change(Operation.Remove, EntityType.Code, "_models", src),
+        "dir_copy": Change(
+            Operation.Copy, EntityType.Directory, "models", tmp_path / "out",
+            source=tmp_path / "models",
+        ),
+    }[op]
+    cs = ChangeSet([_access(src, "a"), raw])
+    ChangeSetProcessor(log=lambda _s: None).process([cs])
+    if op == "remove":
+        assert not src.exists()  # not brought back by the final write
+        return
+    assert _models_in(dst)["a"]["access"] == "public"
+    assert src.exists() == (op != "move")
+    # a resource edit after the raw change starts from the file on disk
+    cs = ChangeSet([_access(dst, "b", "private"), _access(dst, "a", "protected")])
+    ChangeSetProcessor(log=lambda _s: None).process([cs])
+    assert _models_in(dst)["a"]["access"] == "protected"
+    assert _models_in(dst)["b"]["access"] == "private"
+
+
+def test_processor_failure_leaves_earlier_changes_on_disk(tmp_path: Path):
+    """A change that raises keeps every earlier change, in memory or not,
+    and applies neither itself nor anything after it."""
+    from dbt_meshify_spark.plans.changes import ChangeSetProcessorException
+
+    one = tmp_path / "one.yml"
+    two = tmp_path / "two.yml"
+    one.write_text("models:\n  - name: a\n  - name: b\n  - name: c\n")
+    _model_yml(two, "x")
+    # the failing patch's column name is unhashable: the editor raises
+    # after it has started on its copy of the document
+    bad = Change(
+        Operation.Update, EntityType.Model, "b", one,
+        {"description": "never", "columns": [{"name": {"not": "hashable"}}]},
+    )
+    cs = ChangeSet([
+        Change(Operation.Remove, EntityType.Model, "a", one),
+        _access(two, "x"),
+        _access(one, "c"),
+        bad,
+        _access(one, "b"),
+        _access(two, "x", "private"),
+    ])
+    with pytest.raises(ChangeSetProcessorException) as exc:
+        ChangeSetProcessor(log=lambda _s: None).process([cs])
+    assert exc.value.change is bad
+    assert one.read_text() == (
+        "models:\n- name: b\n- name: c\n  access: public\nversion: 2\n"
+    )
+    assert _models_in(two) == {"x": {"name": "x", "access": "public"}}
+
+    # a raw change that raises after in-memory edits: same rule
+    ok = tmp_path / "ok.yml"
+    _model_yml(ok, "m")
+    cs = ChangeSet([
+        _access(ok, "m"),
+        Change(Operation.Copy, EntityType.Code, "missing", tmp_path / "x.sql",
+               source=tmp_path / "missing.sql"),
+        _access(ok, "m", "private"),
+    ])
+    with pytest.raises(ChangeSetProcessorException):
+        ChangeSetProcessor(log=lambda _s: None).process([cs])
+    assert _models_in(ok)["m"]["access"] == "public"
+
+
+def test_add_contract_parses_and_writes_property_file_once(tmp_path: Path, monkeypatch):
+    import json
+
+    from click.testing import CliRunner
+
+    from dbt_meshify_spark.cli import cli
+    from dbt_meshify_spark.plans import changes as C
+
+    names = [f"m{i:02d}" for i in range(15)]
+    (tmp_path / "dbt_project.yml").write_text("name: counted\nversion: '1.0'\n")
+    for n in names:
+        (tmp_path / "models").mkdir(exist_ok=True)
+        (tmp_path / "models" / f"{n}.sql").write_text("select 1 as id")
+    props = tmp_path / "models" / "_models.yml"
+    _model_yml(props, *names)
+    (tmp_path / "target").mkdir()
+    (tmp_path / "target" / "catalog.json").write_text(json.dumps(
+        {"nodes": {n: {"columns": {"id": "int"}} for n in names}}
+    ))
+    reads: list[Path] = []
+    writes: list[Path] = []
+    read, write = C.read_yaml, C.write_yaml
+    monkeypatch.setattr(C, "read_yaml", lambda p: reads.append(p) or read(p))
+    monkeypatch.setattr(C, "write_yaml", lambda p, d: writes.append(p) or write(p, d))
+    res = CliRunner().invoke(cli, [
+        "operation", "add-contract", "-r", "-s", "path:models",
+        "--project-path", str(tmp_path),
+    ])
+    assert res.exit_code == 0, res.output
+    assert [p.resolve() for p in reads] == [props.resolve()]
+    assert [p.resolve() for p in writes] == [props.resolve()]
+    models = _models_in(props)
+    assert sorted(models) == names
+    assert all(m["config"]["contract"]["enforced"] is True for m in models.values())
+
+
+def _fixture_yamls() -> list[Path]:
+    root = Path(__file__).parent / "fixtures"
+    return sorted(list(root.rglob("*.yml")) + list(root.rglob("*.yaml")))
+
+
+@pytest.mark.parametrize(
+    "path", _fixture_yamls(), ids=lambda p: str(p.relative_to(Path(__file__).parent))
+)
+def test_yaml_codec_libyaml_matches_pure_python(path: Path):
+    """The C classes the codec prefers and the pure-Python fallback load
+    every fixture to equal objects and dump them to identical text."""
+    import yaml
+
+    from dbt_meshify_spark.plans.changes import WRITE_OPTIONS, YAML_DUMPER, YAML_LOADER
+
+    assert (YAML_LOADER, YAML_DUMPER) == (yaml.CSafeLoader, yaml.CSafeDumper)
+    text = path.read_text()
+    fast = yaml.load(text, Loader=yaml.CSafeLoader)
+    pure = yaml.load(text, Loader=yaml.SafeLoader)
+    assert fast == pure
+    assert yaml.dump(fast, Dumper=yaml.CSafeDumper, **WRITE_OPTIONS) == yaml.dump(
+        pure, Dumper=yaml.SafeDumper, **WRITE_OPTIONS
+    )
+
+
+def test_yaml_parse_and_dump_only_in_the_codec():
+    """Only plans/changes.py chooses YAML classes: no other module calls
+    yaml.safe_load/safe_dump/load/dump or imports them from yaml."""
+    import ast
+
+    import dbt_meshify_spark
+
+    banned = {"safe_load", "safe_dump", "load", "dump"}
+    pkg = Path(dbt_meshify_spark.__file__).parent
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == pkg / "plans" / "changes.py":
+            continue
+        tree = ast.parse(f.read_text())
+        aliases = {
+            a.asname or a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Import)
+            for a in node.names
+            if a.name == "yaml"
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "yaml":
+                offenders += [
+                    f"{f.name}:{node.lineno}" for a in node.names if a.name in banned
+                ]
+            elif (
+                isinstance(node, ast.Attribute)
+                and node.attr in banned
+                and isinstance(node.value, ast.Name)
+                and node.value.id in aliases
+            ):
+                offenders.append(f"{f.name}:{node.lineno}")
+    assert not offenders, offenders
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,38 @@ def test_loader_edges(project):
     assert exp.depends_on == ["model.tpch_mart.orders_mart"]
 
 
+def test_loader_yaml_refs_follow_the_model_ref_rule(tmp_path):
+    """Exposure, semantic-model and metric refs resolve like model refs: a
+    two-argument ref names the package, a version kwarg is accepted and
+    ignored."""
+    (tmp_path / "dbt_project.yml").write_text("name: shop\nversion: '1.0'\n")
+    models = tmp_path / "models"
+    models.mkdir()
+    (models / "orders.sql").write_text("select 1 as id")
+    (models / "items.sql").write_text("select * from {{ ref('orders') }}")
+    (models / "_exposures.yml").write_text(
+        "version: 2\n"
+        "exposures:\n"
+        "  - name: dash\n"
+        "    depends_on: [\"ref('orders', v=2)\", \"ref('other_proj', 'items')\"]\n"
+        "  - name: report\n"
+        "    depends_on: [\"ref( 'items' , version='3')\", \"ref('orders')\"]\n"
+        "semantic_models:\n"
+        "  - name: orders_sem\n"
+        "    model: \"ref('shop', 'orders', v=1)\"\n"
+    )
+    m = SparkProject.load(tmp_path).manifest
+    assert m.get("exposure.shop.dash").depends_on == [
+        "model.other_proj.items",
+        "model.shop.orders",
+    ]
+    assert m.get("exposure.shop.report").depends_on == [
+        "model.shop.items",
+        "model.shop.orders",
+    ]
+    assert m.get("semantic_model.shop.orders_sem").depends_on == ["model.shop.orders"]
+
+
 def test_loader_config_precedence(project):
     m = project.manifest
     # project tree: marts are tables; in-file config() wins for orders_mart
