@@ -11,28 +11,73 @@ Scope is the observed dbt surface (SURVEY.md §7.4.2), not all of dbt:
 ``ref`` (1/2-arg + v=), ``source``, ``var``, ``env_var``, ``config``,
 ``is_incremental``, ``this``, ``doc``, project macros, and the dbt_utils
 builtins the reference corpus uses (generate_surrogate_key, date_spine).
+
+Two ways to learn what a model's ``ref``/``source``/``config`` calls record:
+
+- ``compile()`` renders the model with recording resolvers (the runner's
+  path, and the only one that produces SQL).
+- ``static_calls()`` reads the calls off ``env.parse(raw_code)`` without
+  generating, compiling or rendering code, like dbt's static parser. It
+  accepts a model only when the template body is ``{{ ... }}`` output of
+  template text and plain calls with constant arguments to ``ref`` (1-2
+  args, ``v=``/``version=``), ``source`` (2 args), ``config``, ``var``
+  (1-2 args) or a *safe* macro whose parameters fit the call. A macro is
+  safe when its defaults are constants and its body is only template
+  text, its own parameters and such calls to other safe macros (a least
+  fixpoint, so recursion is never safe). Anything else -- statements,
+  comments, ``this``, filters, attribute access, a syntax error -- returns
+  None and the caller falls back to ``compile()``, so errors and results
+  for those models are unchanged. An accepted model is one ``compile()``
+  renders without error, recording the same refs, sources and config.
+
+The macro module is compiled on the first ``compile()``; the macro sources
+are parsed when the compiler is built, so a syntax error still fails there,
+and a macro source that could fail code generation or rendering is compiled
+there too.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import re
-from dataclasses import dataclass, field
-from typing import Any, Callable
+from dataclasses import dataclass
+from typing import Any, Callable, NamedTuple
 
 import jinja2
+from jinja2 import nodes
 
 
 class CompileError(Exception):
     pass
 
 
+class Ref(NamedTuple):
+    """One ``ref()`` call: positional ``args`` ``(name,)`` or ``(project,
+    name)``, and the ``v=``/``version=`` pin (None when unpinned)."""
+
+    args: tuple
+    version: Any
+
+
+def _ref_call(args: tuple, kwargs: dict[str, Any]) -> Ref:
+    """The one rule both paths record a ``ref()`` call by: the version
+    kwarg never joins the positional args."""
+    return Ref(tuple(args), kwargs.get("v", kwargs.get("version")))
+
+
 @dataclass
-class CompileResult:
-    sql: str
+class ModelCalls:
+    """What a model's ``config``/``ref``/``source`` calls record."""
+
     config: dict[str, Any]
-    refs: list[tuple]          # (name,) or (project, name); version appended last when pinned
+    refs: list[Ref]
     sources: list[tuple[str, str]]
+
+
+@dataclass
+class CompileResult(ModelCalls):
+    sql: str
 
 
 # Builtin macros, provided to every project (public dbt-utils semantics,
@@ -65,6 +110,14 @@ class _This:
         return self.relation
 
 
+# Names compile() binds in a model's context ahead of any macro of the same
+# name; keep in step with the context built there.
+_CONTEXT_NAMES = frozenset(
+    ("config", "ref", "source", "var", "env_var", "is_incremental", "this",
+     "doc", "project_name", "dbt_utils", "dbt")
+)
+
+
 class JinjaCompiler:
     """One per project. ``macro_sources`` are raw {% macro %} file bodies."""
 
@@ -77,19 +130,84 @@ class JinjaCompiler:
         self.project_name = project_name
         self.vars = dict(vars or {})
         self.env = jinja2.Environment(undefined=jinja2.Undefined)
-        src = _BUILTIN_MACROS + "\n" + "\n".join(macro_sources or [])
+        self._macro_src = _BUILTIN_MACROS + "\n" + "\n".join(macro_sources or [])
+        self._macro_ctx: dict[str, Any] | None = None
         try:
-            self._macro_module = self.env.from_string(src).make_module()
+            tree = self.env.parse(self._macro_src)
         except jinja2.TemplateError as e:
             raise CompileError(f"macro compile failed for {project_name}: {e}") from e
+        # macro name -> parameter names, for the macros static_calls() may
+        # expand
+        self._safe_macros = _safe_macros(tree)
+        if not _module_is_inert(tree):
+            self._macro_context()
 
-    def macro_names(self) -> list[str]:
-        return [
-            n
-            for n in dir(self._macro_module)
-            if not n.startswith("_")
-            and isinstance(getattr(self._macro_module, n), jinja2.runtime.Macro)
-        ]
+    def _macro_context(self) -> dict[str, Any]:
+        """The macros a model's context binds, made on first use."""
+        if self._macro_ctx is None:
+            try:
+                module = self.env.from_string(self._macro_src).make_module()
+            except jinja2.TemplateError as e:
+                raise CompileError(
+                    f"macro compile failed for {self.project_name}: {e}"
+                ) from e
+            ctx = {
+                n: getattr(module, n)
+                for n in dir(module)
+                if not n.startswith("_")
+                and isinstance(getattr(module, n), jinja2.runtime.Macro)
+            }
+            # dbt_utils.x() spellings resolve to the same macros
+            ctx["dbt_utils"] = module
+            ctx["dbt"] = module
+            self._macro_ctx = ctx
+        return self._macro_ctx
+
+    def static_calls(self, raw_code: str) -> ModelCalls | None:
+        """The model's calls read off its parse tree, or None when only
+        ``compile()`` can tell (module docstring)."""
+        if self.env.comment_start_string in raw_code:
+            return None
+        try:
+            tree = self.env.parse(raw_code)
+        except jinja2.TemplateSyntaxError:
+            return None
+        calls = ModelCalls(config={}, refs=[], sources=[])
+        for node in tree.body:
+            if not isinstance(node, nodes.Output):
+                return None
+            for expr in node.nodes:
+                if isinstance(expr, nodes.TemplateData):
+                    continue
+                call = _plain_call(expr)
+                if call is None or not self._record_static(calls, *call):
+                    return None
+        return calls
+
+    def _record_static(
+        self, calls: ModelCalls, name: str, args: list, kwargs: dict[str, Any]
+    ) -> bool:
+        """Record one plain call as compile() would; False when the call
+        is outside the static surface."""
+        if name == "ref":
+            pin_only = set(kwargs) <= {"v", "version"}
+            if not (1 <= len(args) <= 2 and _all_str(args) and pin_only):
+                return False
+            calls.refs.append(_ref_call(args, kwargs))
+        elif name == "source":
+            if len(args) != 2 or kwargs or not _all_str(args):
+                return False
+            calls.sources.append((args[0], args[1]))
+        elif name == "config":
+            calls.config.update(kwargs)
+        elif name == "var":
+            if not 1 <= len(args) <= 2 or kwargs or not isinstance(args[0], str):
+                return False
+        elif name in _CONTEXT_NAMES or name not in self._safe_macros:
+            return False
+        else:
+            return _fits(self._safe_macros[name], len(args), kwargs)
+        return True
 
     def compile(
         self,
@@ -105,7 +223,7 @@ class JinjaCompiler:
         name)`` with optional ``v=``/``version=`` kwarg returns the relation
         string for the target (and may raise for access violations)."""
         config: dict[str, Any] = {}
-        refs: list[tuple] = []
+        refs: list[Ref] = []
         sources: list[tuple[str, str]] = []
 
         def _config(*args: Any, **kwargs: Any) -> str:
@@ -113,10 +231,9 @@ class JinjaCompiler:
             return ""
 
         def _ref(*args: str, **kwargs: Any) -> str:
-            version = kwargs.get("v", kwargs.get("version"))
-            key = tuple(args) + ((version,) if version is not None else ())
-            refs.append(key)
-            return resolve_ref(*args, version=version)
+            ref = _ref_call(args, kwargs)
+            refs.append(ref)
+            return resolve_ref(*ref.args, version=ref.version)
 
         def _source(source_name: str, table_name: str) -> str:
             sources.append((source_name, table_name))
@@ -132,6 +249,7 @@ class JinjaCompiler:
             return value
 
         ctx: dict[str, Any] = {
+            **self._macro_context(),
             "config": _config,
             "ref": _ref,
             "source": _source,
@@ -141,13 +259,8 @@ class JinjaCompiler:
             "this": _This(this_relation or model_name),
             "doc": lambda _name: "",
             "project_name": self.project_name,
+            **(extra_context or {}),
         }
-        for name in self.macro_names():
-            ctx.setdefault(name, getattr(self._macro_module, name))
-        # dbt_utils.x() spellings resolve to the same macros
-        ctx["dbt_utils"] = self._macro_module
-        ctx["dbt"] = self._macro_module
-        ctx.update(extra_context or {})
 
         try:
             rendered = self.env.from_string(raw_code).render(**ctx)
@@ -189,3 +302,152 @@ def _tidy(sql: str) -> str:
         if ln or (out and out[-1]):
             out.append(ln)
     return "\n".join(out).strip()
+
+
+# -- static reading of parse trees -------------------------------------------
+
+# parameter names jinja gives a meaning of its own inside a macro
+_SPECIAL_PARAMS = frozenset(("caller", "varargs", "kwargs", "loop"))
+
+# node types whose generated code cannot fail to compile (no filter or test
+# lookups, blocks, extends or call blocks)
+_INERT_NODES = frozenset((
+    nodes.Template, nodes.Macro, nodes.Output, nodes.TemplateData, nodes.Name,
+    nodes.Const, nodes.Call, nodes.Keyword, nodes.List, nodes.Tuple,
+    nodes.Dict, nodes.Pair, nodes.For, nodes.If, nodes.Assign, nodes.Not,
+    nodes.And, nodes.Or, nodes.Compare, nodes.Operand, nodes.Getattr,
+    nodes.Getitem, nodes.Concat, nodes.CondExpr, nodes.Add, nodes.Sub,
+    nodes.Mul, nodes.Div, nodes.FloorDiv, nodes.Mod, nodes.Neg, nodes.Pos,
+))
+
+
+def _is_const(node: nodes.Node) -> bool:
+    """A literal whose generated code evaluates to itself (``1e999``
+    parses but generates the undefined name ``inf``)."""
+    if isinstance(node, nodes.Const):
+        v = node.value
+        return (
+            v is None
+            or isinstance(v, (str, int))
+            or (isinstance(v, float) and math.isfinite(v))
+        )
+    if isinstance(node, (nodes.List, nodes.Tuple)):
+        return all(_is_const(item) for item in node.items)
+    if isinstance(node, nodes.Dict):
+        return all(
+            isinstance(p.key, nodes.Const) and _is_const(p.key) and _is_const(p.value)
+            for p in node.items
+        )
+    return False
+
+
+def _all_str(values: list) -> bool:
+    return all(isinstance(v, str) for v in values)
+
+
+def _plain_call(
+    node: nodes.Node,
+) -> tuple[str, list, dict[str, Any]] | None:
+    """``name(const, ..., key=const, ...)`` as (name, args, kwargs)."""
+    if (
+        not isinstance(node, nodes.Call)
+        or not isinstance(node.node, nodes.Name)
+        or node.dyn_args is not None
+        or node.dyn_kwargs is not None
+        or not all(_is_const(a) for a in node.args)
+        or not all(_is_const(k.value) for k in node.kwargs)
+    ):
+        return None
+    kwargs = {k.key: k.value.as_const() for k in node.kwargs}
+    if len(kwargs) != len(node.kwargs):
+        return None  # a repeated keyword is a SyntaxError in generated code
+    return node.node.name, [a.as_const() for a in node.args], kwargs
+
+
+def _fits(params: tuple[str, ...], nargs: int, kwargs: dict[str, Any]) -> bool:
+    """A call jinja's Macro accepts: no surplus positional args, and each
+    keyword names a parameter not already passed positionally. Missing
+    arguments are undefined and render empty, as compile() does."""
+    return nargs <= len(params) and all(k in params[nargs:] for k in kwargs)
+
+
+def _params(macro: nodes.Macro) -> tuple[str, ...] | None:
+    """The macro's parameter names, None when duplicated or special."""
+    names = tuple(a.name for a in macro.args)
+    if len(set(names)) != len(names) or _SPECIAL_PARAMS & set(names):
+        return None
+    return names
+
+
+def _top_level_macros(tree: nodes.Template) -> list[nodes.Macro] | None:
+    """The template's macros, None when it holds anything but macros and
+    template text at top level."""
+    macros = []
+    for node in tree.body:
+        if isinstance(node, nodes.Macro):
+            macros.append(node)
+        elif not (
+            isinstance(node, nodes.Output)
+            and all(isinstance(n, nodes.TemplateData) for n in node.nodes)
+        ):
+            return None
+    return macros
+
+
+def _safe_macros(tree: nodes.Template) -> dict[str, tuple[str, ...]]:
+    """Safe macros (module docstring) -> parameter names, solved as a least
+    fixpoint over the last definition of each name."""
+    macros = {m.name: m for m in _top_level_macros(tree) or []}
+    safe: dict[str, tuple[str, ...]] = {}
+    grew = True
+    while grew:
+        grew = False
+        for name, macro in macros.items():
+            if name not in safe and _macro_is_safe(macro, safe):
+                safe[name] = _params(macro)
+                grew = True
+    return safe
+
+
+def _macro_is_safe(macro: nodes.Macro, safe: dict[str, tuple[str, ...]]) -> bool:
+    params = _params(macro)
+    if params is None or not all(_is_const(d) for d in macro.defaults):
+        return False
+    for node in macro.body:
+        if not isinstance(node, nodes.Output):
+            return False
+        for expr in node.nodes:
+            if isinstance(expr, nodes.TemplateData):
+                continue
+            if isinstance(expr, nodes.Name) and expr.name in params:
+                continue
+            call = _plain_call(expr)
+            if (
+                call is None
+                or call[0] in params
+                or call[0] not in safe
+                or not _fits(safe[call[0]], len(call[1]), call[2])
+            ):
+                return False
+    return True
+
+
+def _module_is_inert(tree: nodes.Template) -> bool:
+    """Whether making the macro module cannot fail: only macros and text at
+    top level (nothing runs there), and macros whose generated code always
+    compiles. When False the compiler makes the module at once, so a bad
+    macro file still fails when the project loads."""
+    if _top_level_macros(tree) is None:
+        return False
+    for node in tree.find_all(nodes.Node):
+        if type(node) not in _INERT_NODES:
+            return False
+        if isinstance(node, nodes.Name) and node.ctx == "store" and node.name == "loop":
+            return False
+        if isinstance(node, nodes.Call) and len({k.key for k in node.kwargs}) != len(
+            node.kwargs
+        ):
+            return False
+        if isinstance(node, nodes.Macro) and _params(node) is None:
+            return False
+    return True

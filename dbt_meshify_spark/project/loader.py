@@ -4,8 +4,12 @@ without dbt-core; reference loads via dbtRunner at
 
 Reads dbt_project.yml, model SQL/Python files, property YAML (models,
 sources, exposures, groups, semantic models), macros, seeds, and custom
-generic tests, and derives depends_on edges by compiling each model with
-recording resolvers. Pure driver-side work over bounded metadata.
+generic tests, and derives depends_on edges and in-file config from each
+SQL model's ``ref``/``source``/``config`` calls. Those are read off the
+model's Jinja parse tree when the compiler can prove that equals a render
+(``JinjaCompiler.static_calls``); any other model is compiled with
+recording resolvers. Python models' ``dbt.ref``/``dbt.source`` calls are
+matched by pattern. Pure driver-side work over bounded metadata.
 """
 
 from __future__ import annotations
@@ -21,11 +25,14 @@ from dbt_meshify_spark.project.compiler import JinjaCompiler
 
 _TEST_SHORTHAND = ("unique", "not_null")
 
-# ref('model'), ref('package', 'model'), either with a v=/version= kwarg
-_YAML_REF = re.compile(
-    r"""\bref\s*\(\s*['"](\w+)['"]\s*(?:,\s*['"](\w+)['"]\s*)?"""
+# ref('model'), ref('package', 'model'), either with a v=/version= kwarg;
+# groups are the positional args
+_REF_CALL = (
+    r"""ref\s*\(\s*['"](\w+)['"]\s*(?:,\s*['"](\w+)['"]\s*)?"""
     r"""(?:,\s*(?:v|version)\s*=\s*['"]?[\w.]+['"]?\s*)?\)"""
 )
+_YAML_REF = re.compile(r"\b" + _REF_CALL)
+_PYTHON_REF = re.compile(r"\bdbt\." + _REF_CALL)
 
 
 def _strings(value: Any) -> Iterator[str]:
@@ -52,6 +59,8 @@ class TestSpec:
 
 
 class SparkProject:
+    compiler: JinjaCompiler  # built by load() once the macros are read
+
     def __init__(self, root: Path, config: dict[str, Any]) -> None:
         self.root = Path(root)
         self.config = config
@@ -61,7 +70,6 @@ class SparkProject:
         self.macro_sources: list[str] = []
         self.custom_test_sources: dict[str, str] = {}
         self.vars: dict[str, Any] = dict(config.get("vars", {}))
-        self.compiler = JinjaCompiler(self.name, [], self.vars)
 
     # -- loading -----------------------------------------------------------
 
@@ -386,10 +394,8 @@ class SparkProject:
                 continue
             deps: set[str] = set()
             if r.language == "python":
-                for m in re.finditer(
-                    r"dbt\.ref\s*\(\s*['\"](\w+)['\"]\s*\)", r.raw_code
-                ):
-                    deps.add(f"model.{self.name}.{m.group(1)}")
+                for m in _PYTHON_REF.finditer(r.raw_code):
+                    deps.add(self._ref_uid([a for a in m.groups() if a]))
                 for m in re.finditer(
                     r"dbt\.source\s*\(\s*['\"](\w+)['\"]\s*,\s*['\"](\w+)['\"]\s*\)",
                     r.raw_code,
@@ -398,17 +404,19 @@ class SparkProject:
                     if sid:
                         deps.add(sid)
             else:
-                result = self.compiler.compile(
-                    r.raw_code,
-                    r.name,
-                    resolve_ref=lambda *a, **k: a[-1],
-                    resolve_source=lambda s, t: t,
-                )
+                calls = self.compiler.static_calls(r.raw_code)
+                if calls is None:
+                    calls = self.compiler.compile(
+                        r.raw_code,
+                        r.name,
+                        resolve_ref=lambda *a, **k: a[-1],
+                        resolve_source=lambda s, t: t,
+                    )
                 # in-file config() wins over property yml and the tree
-                r.config = {**r.config, **result.config}
-                for ref in result.refs:
-                    deps.add(self._ref_uid([a for a in ref if isinstance(a, str)]))
-                for s, t in result.sources:
+                r.config = {**r.config, **calls.config}
+                for ref in calls.refs:
+                    deps.add(self._ref_uid([a for a in ref.args if isinstance(a, str)]))
+                for s, t in calls.sources:
                     sid = source_ids.get((s, t))
                     if sid:
                         deps.add(sid)

@@ -9,7 +9,7 @@ from pathlib import Path
 import pytest
 
 from dbt_meshify_spark.project import ProjectRunner, SparkProject
-from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler
+from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler, Ref
 from dbt_meshify_spark.project.runner import AccessViolation
 
 FIXTURE = Path(__file__).parent / "fixtures" / "tpch_proj"
@@ -103,6 +103,90 @@ def test_loader_yaml_refs_follow_the_model_ref_rule(tmp_path):
     assert m.get("semantic_model.shop.orders_sem").depends_on == ["model.shop.orders"]
 
 
+def _shop(root: Path, models: dict[str, str], macros: str | None = None) -> Path:
+    """A one-package project ``shop`` with the given model files."""
+    (root / "dbt_project.yml").write_text("name: shop\nversion: '1.0'\n")
+    (root / "models").mkdir()
+    for name, code in models.items():
+        (root / "models" / name).write_text(code)
+    if macros is not None:
+        (root / "macros").mkdir()
+        (root / "macros" / "m.sql").write_text(macros)
+    return root
+
+
+@pytest.mark.parametrize(
+    "code",
+    [
+        "select * from {{ ref('orders', v='2') }}",
+        "select * from {{ ref('orders', version='2') }}{% if true %}{% endif %}",
+        "select * from {{ ref('orders', v=2) }}",
+    ],
+)
+def test_loader_string_version_ref_names_the_model(tmp_path, code):
+    """A string version pin stays out of the ref's positional args on the
+    static path and the compile fallback alike (it made model.orders.2)."""
+    root = _shop(tmp_path, {"orders.sql": "select 1 as id", "items.sql": code})
+    m = SparkProject.load(root).manifest
+    assert m.get("model.shop.items").depends_on == ["model.shop.orders"]
+
+
+def test_loader_python_model_refs_follow_the_model_ref_rule(tmp_path):
+    root = _shop(
+        tmp_path,
+        {
+            "orders.sql": "select 1 as id",
+            "gaps.py": (
+                "def model(dbt, session):\n"
+                "    a = dbt.ref('orders', v=2)\n"
+                "    b = dbt.ref(\"other_proj\", \"items\")\n"
+                "    return a.union(b)\n"
+            ),
+        },
+    )
+    m = SparkProject.load(root).manifest
+    assert m.get("model.shop.gaps").depends_on == [
+        "model.other_proj.items",
+        "model.shop.orders",
+    ]
+
+
+@pytest.mark.parametrize(
+    "macros",
+    [
+        "{% macro broken( %}x{% endmacro %}",
+        "{% macro shout(x) %}{{ x | no_such_filter }}{% endmacro %}",
+        "{{ undefined_thing.attr }}",
+    ],
+)
+def test_loader_bad_macro_file_fails_at_load(tmp_path, macros):
+    """The macro module is made lazily, yet a macro file that cannot
+    compile still fails the load even when every model is read statically."""
+    root = _shop(tmp_path, {"a.sql": "select 1 as id"}, macros=macros)
+    with pytest.raises(CompileError):
+        SparkProject.load(root)
+
+
+def test_loader_compiles_no_meshgen_model(tmp_path, monkeypatch):
+    """Every generated model's edges come off its parse tree: loading the
+    monolith generates and compiles no Jinja template at all."""
+    import jinja2
+
+    from perfbench import meshgen
+
+    info = meshgen.generate(tmp_path, 1, 8, 15)
+    compiled = []
+    real = jinja2.Environment.compile
+    monkeypatch.setattr(
+        jinja2.Environment,
+        "compile",
+        lambda self, *a, **k: compiled.append(a[0]) or real(self, *a, **k),
+    )
+    m = SparkProject.load(info["monolith"]).manifest
+    assert len(m.models) == 120
+    assert compiled == []
+
+
 def test_loader_config_precedence(project):
     m = project.manifest
     # project tree: marts are tables; in-file config() wins for orders_mart
@@ -181,6 +265,111 @@ def test_compile_error_on_unknown_jinja():
         c.compile("{% bad syntax %}", "m",
                   resolve_ref=lambda *a, **k: a[-1],
                   resolve_source=lambda s, t: t)
+
+
+def _compile(c: JinjaCompiler, code: str):
+    return c.compile(code, "m", resolve_ref=lambda *a, **k: a[-1],
+                     resolve_source=lambda s, t: t)
+
+
+def _sql_models(root) -> tuple[list, JinjaCompiler]:
+    p = SparkProject.load(root)
+    return [r for r in p.manifest.models.values() if r.language == "sql"], p.compiler
+
+
+def _meshgen_monolith(root: Path, seed: int) -> str:
+    from perfbench import meshgen
+
+    return meshgen.generate(root / f"s{seed}", seed, 8, 15)["monolith"]
+
+
+@pytest.mark.parametrize("seed", [None, 1, 2, 3])
+def test_static_calls_equal_compile(tmp_path, seed):
+    """Differential: where the parse-tree path answers, it records exactly
+    the refs, sources and config compile() records. The tpch fixture (seed
+    None) falls back only for its {% if %} and loop-macro models; every
+    generated monolith model takes the static path."""
+    root = FIXTURE if seed is None else _meshgen_monolith(tmp_path, seed)
+    models, compiler = _sql_models(root)
+    fallback = set()
+    for r in models:
+        static = compiler.static_calls(r.raw_code)
+        if static is None:
+            fallback.add(r.name)
+            continue
+        full = _compile(compiler, r.raw_code)
+        assert (static.refs, static.sources, static.config) == (
+            full.refs, full.sources, full.config
+        ), r.name
+    expected = {"orders_mart", "customers_mart"} if seed is None else set()
+    assert fallback == expected
+
+
+_FALLBACK_MACROS = [
+    "{% macro calls_ref() %}{{ ref('a') }}{% endmacro %}",
+    "{% macro loops(xs) %}{% for x in xs %}{{ x }}{% endfor %}{% endmacro %}",
+]
+_A = [Ref(("a",), None)]
+
+
+@pytest.mark.parametrize(
+    "code, expected",
+    [
+        ("{% if true %}{{ ref('a') }}{% endif %}", _A),
+        ("{# {{ ref('b') }} #}{{ ref('a') }}", _A),
+        ("select * from {{ this }}", []),
+        ("{% if is_incremental() %}x{% endif %}{{ ref('a') }}", _A),
+        ("{{ env_var('DMS_TEST_UNSET_VARIABLE', 'x') }}", []),
+        ("{{ unknown_fn() }}", CompileError),
+        ("{{ calls_ref() }}", CompileError),
+        ("{{ loops(['x']) }}{{ ref('a') }}", _A),
+        ("{{ ref('p', 'a', 'b') }}", [Ref(("p", "a", "b"), None)]),
+        ("{{ ref('a', foo=1) }}", _A),
+        ("{{ ref() }}", IndexError),
+        ("{{ source('s', 't', 'u') }}", TypeError),
+        ("{{ ref('a' }}", CompileError),
+        ("{{ -ref('a') }}", TypeError),
+        ("{{ ref('a') | upper }}", _A),
+        ("{{ dbt_utils.generate_surrogate_key(['a', 'b']) }}", []),
+        ("{{ type_numeric(1) }}", TypeError),
+        ("{{ config(x=1e999) }}", NameError),
+        ("{{ config(a=1, a=2) }}", SyntaxError),
+    ],
+)
+def test_static_calls_fall_back(code, expected):
+    """Inputs outside the static surface return None, and compile() gives
+    them the refs (or the exception type) it always did."""
+    c = JinjaCompiler("p", _FALLBACK_MACROS)
+    assert c.static_calls(code) is None
+    if isinstance(expected, list):
+        assert _compile(c, code).refs == expected
+    else:
+        with pytest.raises(expected):
+            _compile(c, code)
+
+
+@pytest.mark.parametrize(
+    "code",
+    [
+        "select {{ cents_to_dollars('x') }}, {{ cents_to_dollars('y', scale=4) }}",
+        "{{ config(materialized='table', tags=['a'], meta={'k': 1}) }}{{ var('v') }}",
+        "{{ ref('shop', 'a', v=2) }} {{ source('s', 't') }} {{ var('nope', 3) }}",
+        "{{ wrap() }} {{ type_string() }}",
+    ],
+)
+def test_static_calls_accept_safe_surface(code):
+    macros = [
+        "{% macro cents_to_dollars(c, scale=2) %}{{ c }}/100::{{ scale }}"
+        "{{ type_numeric() }}{% endmacro %}",
+        "{% macro wrap() %}({{ cents_to_dollars('z', 1) }}){% endmacro %}",
+    ]
+    c = JinjaCompiler("p", macros, {"v": "x"})
+    static = c.static_calls(code)
+    full = _compile(c, code)
+    assert static is not None
+    assert (static.refs, static.sources, static.config) == (
+        full.refs, full.sources, full.config
+    )
 
 
 # -- runner ----------------------------------------------------------------
