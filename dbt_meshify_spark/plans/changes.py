@@ -16,6 +16,16 @@ One YAML codec serves the whole package: ``load_yaml``/``dump_yaml`` use
 libyaml's C loader and emitter when PyYAML was built with it, and the
 pure-Python classes of the same safe schema otherwise.
 
+``load_yaml`` builds the document straight from the loader's node tree:
+str scalars, maps and sequences become Python objects in one recursive
+walk, and every other node (ints, bools, nulls, floats, timestamps,
+explicit tags, ``!!set``, ``!!omap``, ...) goes to PyYAML's own
+``construct_object``. Both share the loader's memo of constructed nodes,
+so aliased objects stay one object and ``dump_yaml`` emits the same
+anchors. A document with a merge key (``<<``), a value key (``=``), a
+non-scalar key or a recursive alias is parsed again and constructed
+whole by PyYAML instead. Either way the result equals ``yaml.load`` with the same loader.
+
 Parse once, write once: within one ``ChangeSetProcessor.process`` call a
 property file is parsed on the first resource change that touches it.
 Every later resource change for that path is applied to the parsed
@@ -245,8 +255,65 @@ else:
 WRITE_OPTIONS = {"sort_keys": False, "width": 100, "allow_unicode": True}
 
 
+_MAP, _SEQ, _STR, _MERGE, _VALUE = (
+    "tag:yaml.org,2002:" + t for t in ("map", "seq", "str", "merge", "value")
+)
+
+
+class _Reconstruct(Exception):
+    """A document _build leaves whole to PyYAML's constructor."""
+
+
 def load_yaml(text: str) -> Any:
-    return yaml.load(text, Loader=YAML_LOADER)
+    """The one document in ``text``, equal to ``yaml.load`` with the same
+    loader (module docstring)."""
+    loader = YAML_LOADER(text)
+    try:
+        node = loader.get_single_node()
+        return None if node is None else _build(loader, node, set())
+    except _Reconstruct:
+        return yaml.load(text, Loader=YAML_LOADER)
+    finally:
+        loader.dispose()
+
+
+def _build(loader: Any, node: yaml.Node, building: set) -> Any:
+    """What PyYAML constructs for ``node``. str scalars, maps and sequences
+    are made here, every other node by the loader; both memoize in the
+    loader's ``constructed_objects``, so an alias yields the same object."""
+    memo = loader.constructed_objects
+    if node in memo:
+        return memo[node]
+    tag = node.tag
+    if tag == _STR and isinstance(node, yaml.ScalarNode):
+        data: Any = node.value
+    elif tag == _MAP and isinstance(node, yaml.MappingNode):
+        if node in building:
+            raise _Reconstruct  # a recursive alias
+        building.add(node)
+        data = {}
+        for key_node, value_node in node.value:
+            # merge (<<) and value (=) keys, and keys that could be
+            # unhashable, take PyYAML's own path
+            if not isinstance(key_node, yaml.ScalarNode) or key_node.tag in (
+                _MERGE, _VALUE
+            ):
+                raise _Reconstruct
+            key = _build(loader, key_node, building)
+            data[key] = _build(loader, value_node, building)
+        building.discard(node)
+    elif tag == _SEQ and isinstance(node, yaml.SequenceNode):
+        if node in building:
+            raise _Reconstruct
+        building.add(node)
+        data = [_build(loader, item, building) for item in node.value]
+        building.discard(node)
+    else:
+        return loader.construct_object(node, deep=True)
+    if node in memo:
+        raise _Reconstruct  # the loader made it meanwhile: a recursive alias
+    memo[node] = data
+    return data
 
 
 def dump_yaml(doc: Any, **opts: Any) -> str:

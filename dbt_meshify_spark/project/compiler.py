@@ -12,23 +12,41 @@ Scope is the observed dbt surface (SURVEY.md §7.4.2), not all of dbt:
 ``is_incremental``, ``this``, ``doc``, project macros, and the dbt_utils
 builtins the reference corpus uses (generate_surrogate_key, date_spine).
 
-Two ways to learn what a model's ``ref``/``source``/``config`` calls record:
+Three readers learn what a model's ``ref``/``source``/``config`` calls
+record, cheapest first; each one declines what it cannot read and hands
+the model to the next:
 
-- ``compile()`` renders the model with recording resolvers (the runner's
-  path, and the only one that produces SQL).
-- ``static_calls()`` reads the calls off ``env.parse(raw_code)`` without
-  generating, compiling or rendering code, like dbt's static parser. It
-  accepts a model only when the template body is ``{{ ... }}`` output of
-  template text and plain calls with constant arguments to ``ref`` (1-2
-  args, ``v=``/``version=``), ``source`` (2 args), ``config``, ``var``
-  (1-2 args) or a *safe* macro whose parameters fit the call. A macro is
-  safe when its defaults are constants and its body is only template
-  text, its own parameters and such calls to other safe macros (a least
-  fixpoint, so recursion is never safe). Anything else -- statements,
-  comments, ``this``, filters, attribute access, a syntax error -- returns
-  None and the caller falls back to ``compile()``, so errors and results
-  for those models are unchanged. An accepted model is one ``compile()``
-  renders without error, recording the same refs, sources and config.
+1. Tokens. ``static_calls()`` first walks ``env.lex(raw_code)``, Jinja's
+   own tokenizer, and accepts a model only when its tokens are template
+   text and ``{{ NAME(literal, ..., key=literal, ...) }}`` groups, where a
+   literal is a string with no backslash or line break, or a decimal
+   integer without leading zeros. Any other token (a block tag, ``raw``, a
+   comment, a float, a sign, a list or dict, a filter), a lexing error, a
+   callee the parser reads as something other than a name (``not``,
+   ``true``/``false``/``none``), a positional argument after a keyword or
+   a repeated keyword declines. Lexing is Jinja's, so delimiters,
+   whitespace control and raw blocks follow Jinja's rules.
+2. Parse tree. A declined model is read off ``env.parse(raw_code)``
+   without generating, compiling or rendering code, like dbt's static
+   parser. It accepts a model only when the template body is ``{{ ... }}``
+   output of template text and plain calls with constant arguments
+   (strings, finite numbers, booleans, None, and lists, tuples and dicts
+   of them); this covers ``tags=['a']`` and ``meta={...}``.
+3. Compile. ``compile()`` renders the model with recording resolvers (the
+   runner's path, and the only one that produces SQL).
+
+Both static readers pass each call to one rule, which accepts calls to
+``ref`` (1-2 args, ``v=``/``version=``), ``source`` (2 args), ``config``,
+``var`` (1-2 args) or a *safe* macro whose parameters fit the call. A macro
+is safe when its defaults are constants and its body is only template
+text, its own parameters and such calls to other safe macros (a least
+fixpoint, so recursion is never safe). When that rule rejects a call, or
+the parse-tree reader declines too -- statements, comments, ``this``,
+filters, attribute access, a syntax error -- ``static_calls()`` returns
+None and the caller falls back to ``compile()``, so errors and results for
+those models are unchanged. An accepted model is one ``compile()`` renders
+without error, recording the same refs, sources and config. ``compile()``
+reports any failure as a ``CompileError`` that names the model.
 
 The macro module is compiled on the first ``compile()``; the macro sources
 are parsed when the compiler is built, so a syntax error still fails there,
@@ -164,24 +182,19 @@ class JinjaCompiler:
         return self._macro_ctx
 
     def static_calls(self, raw_code: str) -> ModelCalls | None:
-        """The model's calls read off its parse tree, or None when only
-        ``compile()`` can tell (module docstring)."""
+        """The model's calls read off its tokens or else its parse tree, or
+        None when only ``compile()`` can tell (module docstring)."""
         if self.env.comment_start_string in raw_code:
             return None
-        try:
-            tree = self.env.parse(raw_code)
-        except jinja2.TemplateSyntaxError:
+        found = _lexed_calls(self.env, raw_code)
+        if found is None:
+            found = _parsed_calls(self.env, raw_code)
+        if found is None:
             return None
         calls = ModelCalls(config={}, refs=[], sources=[])
-        for node in tree.body:
-            if not isinstance(node, nodes.Output):
+        for call in found:
+            if not self._record_static(calls, *call):
                 return None
-            for expr in node.nodes:
-                if isinstance(expr, nodes.TemplateData):
-                    continue
-                call = _plain_call(expr)
-                if call is None or not self._record_static(calls, *call):
-                    return None
         return calls
 
     def _record_static(
@@ -264,7 +277,9 @@ class JinjaCompiler:
 
         try:
             rendered = self.env.from_string(raw_code).render(**ctx)
-        except jinja2.TemplateError as e:
+        except CompileError:
+            raise  # a resolver's own verdict, e.g. an access violation
+        except Exception as e:
             raise CompileError(f"compile failed for {model_name}: {e}") from e
         return CompileResult(
             sql=_tidy(rendered), config=config, refs=refs, sources=sources
@@ -302,6 +317,94 @@ def _tidy(sql: str) -> str:
         if ln or (out and out[-1]):
             out.append(ln)
     return "\n".join(out).strip()
+
+
+# -- static reading of token streams ------------------------------------------
+
+# callee names Jinja's parser reads as an operator or a constant, not a Name
+_NOT_CALLEES = frozenset(("not", "true", "false", "True", "False", "none", "None"))
+_DECIMAL = re.compile(r"[1-9][0-9]*|0")
+_LPAREN, _RPAREN, _COMMA, _ASSIGN = (("operator", op) for op in "(),=")
+_NOT_LITERAL = object()
+
+
+def _lexed_calls(
+    env: jinja2.Environment, raw_code: str
+) -> list[tuple[str, list, dict[str, Any]]] | None:
+    """The calls of a template made only of text and ``{{ call }}``
+    groups, read off Jinja's token stream; None for any other template."""
+    found = []
+    group: list[tuple[str, str]] | None = None
+    try:
+        for _, kind, value in env.lex(raw_code):
+            if kind == "whitespace":
+                continue
+            if group is None:
+                if kind == "variable_begin":
+                    group = []
+                elif kind != "data":
+                    return None
+            elif kind == "variable_end":
+                call = _group_call(group)
+                if call is None:
+                    return None
+                found.append(call)
+                group = None
+            else:
+                group.append((kind, value))
+    except jinja2.TemplateSyntaxError:
+        return None
+    return found if group is None else None
+
+
+def _group_call(
+    group: list[tuple[str, str]],
+) -> tuple[str, list, dict[str, Any]] | None:
+    """``NAME ( literal, ..., key=literal, ... )`` as (name, args, kwargs),
+    with the trailing comma Jinja's parser allows; None for anything else
+    and for what the parser would not read as that one plain call."""
+    if len(group) < 3 or group[0][0] != "name" or group[1] != _LPAREN:
+        return None
+    name = group[0][1]
+    if group[-1] != _RPAREN or name in _NOT_CALLEES or not name.isidentifier():
+        return None
+    args: list = []
+    kwargs: dict[str, Any] = {}
+    i, end = 2, len(group) - 1
+    while i < end:
+        key = None
+        if group[i][0] == "name" and group[i + 1] == _ASSIGN:
+            key = group[i][1]
+            if key in kwargs or not key.isidentifier():
+                return None
+            i += 2
+        elif kwargs:
+            return None  # a positional argument after a keyword
+        value = _literal(*group[i]) if i < end else _NOT_LITERAL
+        if value is _NOT_LITERAL:
+            return None
+        if key is None:
+            args.append(value)
+        else:
+            kwargs[key] = value
+        i += 1
+        if i < end:
+            if group[i] != _COMMA:
+                return None
+            i += 1
+    return name, args, kwargs
+
+
+def _literal(kind: str, value: str) -> Any:
+    """The value of a string or decimal integer token, when reading it
+    needs no unescaping; ``_NOT_LITERAL`` otherwise."""
+    if kind == "string":
+        if "\\" in value or "\n" in value or "\r" in value:
+            return _NOT_LITERAL
+        return value[1:-1]
+    if kind == "integer" and _DECIMAL.fullmatch(value):
+        return int(value)
+    return _NOT_LITERAL
 
 
 # -- static reading of parse trees -------------------------------------------
@@ -343,6 +446,29 @@ def _is_const(node: nodes.Node) -> bool:
 
 def _all_str(values: list) -> bool:
     return all(isinstance(v, str) for v in values)
+
+
+def _parsed_calls(
+    env: jinja2.Environment, raw_code: str
+) -> list[tuple[str, list, dict[str, Any]]] | None:
+    """The calls of a template whose body is only text and ``{{ call }}``
+    output of plain calls, read off its parse tree; None otherwise."""
+    try:
+        tree = env.parse(raw_code)
+    except jinja2.TemplateSyntaxError:
+        return None
+    found = []
+    for node in tree.body:
+        if not isinstance(node, nodes.Output):
+            return None
+        for expr in node.nodes:
+            if isinstance(expr, nodes.TemplateData):
+                continue
+            call = _plain_call(expr)
+            if call is None:
+                return None
+            found.append(call)
+    return found
 
 
 def _plain_call(

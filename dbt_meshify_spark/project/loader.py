@@ -6,9 +6,11 @@ Reads dbt_project.yml, model SQL/Python files, property YAML (models,
 sources, exposures, groups, semantic models), macros, seeds, and custom
 generic tests, and derives depends_on edges and in-file config from each
 SQL model's ``ref``/``source``/``config`` calls. Those are read off the
-model's Jinja parse tree when the compiler can prove that equals a render
-(``JinjaCompiler.static_calls``); any other model is compiled with
-recording resolvers. Python models' ``dbt.ref``/``dbt.source`` calls are
+model's Jinja tokens or parse tree when the compiler can prove that equals
+a render (``JinjaCompiler.static_calls``); any other model is compiled
+with recording resolvers, and a model that fails to compile, or whose
+``ref()`` names no model, fails the load with a ``CompileError`` naming
+it. Python models' ``dbt.ref``/``dbt.source`` calls are
 matched by pattern. Pure driver-side work over bounded metadata.
 """
 
@@ -21,7 +23,7 @@ from typing import Any, Iterator
 
 from dbt_meshify_spark.plans.changes import load_yaml
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
-from dbt_meshify_spark.project.compiler import JinjaCompiler
+from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler
 
 _TEST_SHORTHAND = ("unique", "not_null")
 
@@ -280,11 +282,10 @@ class SparkProject:
             # compile time by the runner) but beats the project tree.
             r.config = {**r.config, **{k.lstrip("+"): v for k, v in cfg.items()}}
             if "columns" in entry:
-                r.columns = {
-                    c["name"]: str(c.get("data_type", "")) for c in entry["columns"]
-                }
+                columns = entry["columns"] or []
+                r.columns = {c["name"]: str(c.get("data_type", "")) for c in columns}
                 r.meta["column_docs"] = {
-                    c["name"]: c.get("description", "") for c in entry["columns"]
+                    c["name"]: c.get("description", "") for c in columns
                 }
             self._collect_tests(entry, name)
 
@@ -319,10 +320,11 @@ class SparkProject:
                 )
             )
 
-        for t in entry.get("tests", []) + entry.get("data_tests", []):
+        # a null list reads as empty, as for models:/sources:/config:
+        for t in (entry.get("tests") or []) + (entry.get("data_tests") or []):
             add(t, None)
         for col in entry.get("columns") or []:
-            for t in col.get("tests", []) + col.get("data_tests", []):
+            for t in (col.get("tests") or []) + (col.get("data_tests") or []):
                 add(t, col["name"])
 
     def _load_sources(self, entries: list[dict], patch_path: str) -> None:
@@ -415,7 +417,13 @@ class SparkProject:
                 # in-file config() wins over property yml and the tree
                 r.config = {**r.config, **calls.config}
                 for ref in calls.refs:
-                    deps.add(self._ref_uid([a for a in ref.args if isinstance(a, str)]))
+                    names = [a for a in ref.args if isinstance(a, str)]
+                    if not names:
+                        raise CompileError(
+                            f"compile failed for {r.name}: ref{ref.args!r} names "
+                            "no model"
+                        )
+                    deps.add(self._ref_uid(names))
                 for s, t in calls.sources:
                     sid = source_ids.get((s, t))
                     if sid:

@@ -483,6 +483,65 @@ def test_yaml_codec_libyaml_matches_pure_python(path: Path):
     )
 
 
+_NODE_TREE_DOCS = {
+    "aliases": (
+        "a: &m {k: [1, 2], s: x}\nb: *m\nc: &l [p, {q: r}]\nd: *l\n"
+        "e: [*m, *l, &s shared, *s]\n"
+    ),
+    "merge_key": "base: &b {x: 1, y: 2}\nm:\n  <<: *b\n  y: 3\n",
+    "value_key": "v:\n  =: 1\n  a: 2\n",
+    "tags": "a: !!str 1\nb: !!int '2'\nc: !!set {x, y}\nd: !!omap [{k: 1}, {j: 2}]\n",
+    "scalars": (
+        "d: 2020-01-02\nts: 2020-01-02 03:04:05\nf: 1.5\ninf: .inf\nt: true\n"
+        "F: no\nn: null\nn2: ~\nempty:\ni: 0x1f\ns: '1'\nu: \u00e9t\u00e9\n"
+    ),
+    "empty": "",
+    "comment_only": "# nothing\n",
+    "list_key": "? [a, b]\n: 1\n",
+    "map_key": "? {a: 1}\n: 1\n",
+    "recursive_seq": "&r [a, *r]\n",
+    "recursive_map": "top: &r {name: x, self: *r}\n",
+    "top_list": "- a\n- {b: [c, 1, null]}\n",
+}
+
+
+_NODE_TREE_DOCS.update(
+    (str(p.relative_to(Path(__file__).parent)), p.read_text()) for p in _fixture_yamls()
+)
+
+
+@pytest.mark.parametrize("pure", [False, True], ids=["libyaml", "pure"])
+@pytest.mark.parametrize("name", sorted(_NODE_TREE_DOCS))
+def test_yaml_node_tree_load_matches_pyyaml(monkeypatch, name, pure):
+    """load_yaml builds from libyaml's (or PyYAML's) node tree what
+    yaml.load constructs: equal objects, identical dumps, the same aliased
+    objects shared, and the same exception type for an unhashable key."""
+    import yaml
+
+    from dbt_meshify_spark.plans import changes
+
+    text = _NODE_TREE_DOCS[name]
+    if pure:
+        monkeypatch.setattr(changes, "YAML_LOADER", yaml.SafeLoader)
+    try:
+        ref = yaml.load(text, Loader=yaml.SafeLoader)
+    except yaml.YAMLError as e:
+        with pytest.raises(type(e)):
+            changes.load_yaml(text)
+        return
+    got = changes.load_yaml(text)
+    assert changes.dump_yaml(got) == changes.dump_yaml(ref)
+    if name.startswith("recursive"):
+        # == recurses without end on self-containing objects
+        inner = got[1] if name == "recursive_seq" else got["top"]["self"]
+        assert inner is (got if name == "recursive_seq" else got["top"])
+        return
+    assert got == ref
+    if name == "aliases":
+        assert got["a"] is got["b"] and got["c"] is got["d"]
+        assert got["e"][0] is got["a"] and got["e"][1] is got["c"]
+
+
 def test_yaml_parse_and_dump_only_in_the_codec():
     """Only plans/changes.py chooses YAML classes: no other module calls
     yaml.safe_load/safe_dump/load/dump or imports them from yaml."""

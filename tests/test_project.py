@@ -9,7 +9,12 @@ from pathlib import Path
 import pytest
 
 from dbt_meshify_spark.project import ProjectRunner, SparkProject
-from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler, Ref
+from dbt_meshify_spark.project.compiler import (
+    CompileError,
+    JinjaCompiler,
+    ModelCalls,
+    Ref,
+)
 from dbt_meshify_spark.project.runner import AccessViolation
 
 FIXTURE = Path(__file__).parent / "fixtures" / "tpch_proj"
@@ -168,23 +173,30 @@ def test_loader_bad_macro_file_fails_at_load(tmp_path, macros):
 
 
 def test_loader_compiles_no_meshgen_model(tmp_path, monkeypatch):
-    """Every generated model's edges come off its parse tree: loading the
-    monolith generates and compiles no Jinja template at all."""
+    """Every generated model's edges come off its tokens: loading the
+    monolith generates and compiles no Jinja template at all, and parses
+    only the macro sources, once."""
     import jinja2
 
     from perfbench import meshgen
 
     info = meshgen.generate(tmp_path, 1, 8, 15)
-    compiled = []
-    real = jinja2.Environment.compile
+    compiled, parsed = [], []
+    real_compile, real_parse = jinja2.Environment.compile, jinja2.Environment.parse
     monkeypatch.setattr(
         jinja2.Environment,
         "compile",
-        lambda self, *a, **k: compiled.append(a[0]) or real(self, *a, **k),
+        lambda self, *a, **k: compiled.append(a[0]) or real_compile(self, *a, **k),
+    )
+    monkeypatch.setattr(
+        jinja2.Environment,
+        "parse",
+        lambda self, *a, **k: parsed.append(a[0]) or real_parse(self, *a, **k),
     )
     m = SparkProject.load(info["monolith"]).manifest
     assert len(m.models) == 120
     assert compiled == []
+    assert len(parsed) == 1 and "{% macro generate_surrogate_key(" in parsed[0]
 
 
 def test_loader_config_precedence(project):
@@ -334,18 +346,155 @@ _A = [Ref(("a",), None)]
         ("{{ type_numeric(1) }}", TypeError),
         ("{{ config(x=1e999) }}", NameError),
         ("{{ config(a=1, a=2) }}", SyntaxError),
+        ("{{ ref(1) }}", [Ref((1,), None)]),
     ],
 )
 def test_static_calls_fall_back(code, expected):
     """Inputs outside the static surface return None, and compile() gives
-    them the refs (or the exception type) it always did."""
+    them the refs it always did, or fails with a CompileError naming the
+    model whose cause is any other exception type listed."""
     c = JinjaCompiler("p", _FALLBACK_MACROS)
     assert c.static_calls(code) is None
     if isinstance(expected, list):
         assert _compile(c, code).refs == expected
     else:
-        with pytest.raises(expected):
+        with pytest.raises(CompileError, match="^compile failed for m: ") as info:
             _compile(c, code)
+        if expected is not CompileError:
+            assert type(info.value.__cause__) is expected
+
+
+@pytest.mark.parametrize(
+    "code",
+    [
+        "{{ ref(1) }}",
+        "{{ ref() }}",
+        "{{ source('s', 't', 'u') }}",
+        "{{ -ref('a') }}",
+        "{{ config(x=1e999) }}",
+        "{{ config(a=1, a=2) }}",
+    ],
+)
+def test_loader_malformed_model_fails_naming_it(tmp_path, code):
+    """A model that cannot compile, or whose ref() names no model, fails
+    the load with a CompileError that names it (these raised bare
+    IndexError/TypeError/NameError/SyntaxError)."""
+    root = _shop(tmp_path, {"orders.sql": "select 1 as id", "bad_one.sql": code})
+    with pytest.raises(CompileError, match="^compile failed for bad_one: "):
+        SparkProject.load(root)
+
+
+def test_compile_passes_resolver_errors_through():
+    """A resolver's own CompileError (the runner's AccessViolation) reaches
+    the caller as raised, not wrapped."""
+    denied = AccessViolation("private model")
+
+    def deny(*a, **k):
+        raise denied
+
+    c = JinjaCompiler("p")
+    with pytest.raises(AccessViolation) as info:
+        c.compile("{{ ref('a') }}", "m", resolve_ref=deny,
+                  resolve_source=lambda s, t: t)
+    assert info.value is denied
+
+
+# Differential inputs for the token reader: each holds at least one call
+# the parse-tree path reads the same way, or a shape one of them declines.
+_TOKEN_CASES = [
+    "select\n  {{- ref('a') -}}  \n x {{- source('s', 't') }}",
+    "{{+ ref('b') }}",
+    "{{ ref('b') +}}",
+    "{{{ ref('a') }}",
+    "{{ ref('a}}') }}",
+    "{{ ref('{% if %}') }} {{ source('s', \"{%\") }}",
+    "{{ ref('a\\\\b') }}",
+    "{{ ref('a\\'b') }}",
+    "{{ ref('\u00e9t\u00e9') }} {{ source('\u6570', '\U0001f600') }}",
+    "{{ true() }}",
+    "{{ True() }}",
+    "{{ none() }}",
+    "{{ not('a') }}",
+    "{{ ref('a',) }}",
+    "{{ ref(,) }}",
+    "{{ ref(v=1, 'a') }}",
+    "{{ ref('a', v=1, v=2) }}",
+    "{{ cents_to_dollars(007) }}",
+    "{{ cents_to_dollars(-1) }}",
+    "{{ cents_to_dollars(1.5) }}",
+    "{{ cents_to_dollars(0x1f) }} {{ cents_to_dollars(1_000) }}",
+    "{{ cents_to_dollars(0) }} {{ cents_to_dollars(10, scale=3) }}",
+    "{{ ref('p', 'a', 'b') }}",
+    "{% raw %}{{ ref('a') }}{% endraw %}",
+    "select {{ ref('a')",
+    "{{ ref('a') }} {{ ref('b'",
+    "{{ ref('a' 'b') }}",
+    "{{ ref('a')('b') }}",
+    "{{ ref('a'), ref('b') }}",
+    "{{ ref('a') if x }}",
+    "{{ config(materialized='table', tags=['a']) }}",
+    "{{ config( materialized = 'view' ,\n  unique_key='id' ) }}",
+    "{{ ref(\"a\") }}\n{{ ref('b', version=2) }}\r\n{{ var('v', 1) }}",
+    "{{ ref('a\nb') }}",
+    "{{ source('s', 't', ) }}{{ type_numeric() }}",
+    "{{ ref(x) }}",
+    "{{ ref('a') | upper }}",
+    "{{ ref }}",
+    "{{ }}",
+    "{{ ref('a') }}{% if true %}{% endif %}",
+]
+
+
+@pytest.mark.parametrize("code", _TOKEN_CASES)
+def test_static_calls_tokens_equal_parse_tree(code):
+    """The token reader answers exactly what the parse-tree reader answers:
+    the same ModelCalls, or None."""
+    from dbt_meshify_spark.project import compiler as C
+
+    macros = [
+        "{% macro cents_to_dollars(c, scale=2) %}{{ c }}/100::{{ scale }}"
+        "{% endmacro %}",
+        # a safe macro the parser never calls: `not(x)` reads as `not x`
+        "{% macro not(x) %}{{ x }}{% endmacro %}",
+    ]
+    c = JinjaCompiler("p", macros)
+    assert "not" in c._safe_macros
+    tree = C._parsed_calls(c.env, code)
+    by_tree = None
+    if tree is not None and "{#" not in code:
+        by_tree = ModelCalls(config={}, refs=[], sources=[])
+        if not all(c._record_static(by_tree, *call) for call in tree):
+            by_tree = None
+    assert c.static_calls(code) == by_tree
+    tokens = C._lexed_calls(c.env, code)
+    if tokens is not None:
+        assert tokens == tree
+
+
+def test_loader_reads_null_lists_as_empty(tmp_path):
+    """A null tests:, data_tests: or columns: in a property entry reads as
+    empty (it raised TypeError: NoneType + list)."""
+    root = _shop(tmp_path, {"orders.sql": "select 1 as id", "items.sql": "select 2"})
+    (root / "models" / "_models.yml").write_text(
+        "version: 2\n"
+        "models:\n"
+        "  - name: orders\n"
+        "    tests:\n"
+        "    data_tests:\n"
+        "    columns:\n"
+        "  - name: items\n"
+        "    data_tests: [unique]\n"
+        "    columns:\n"
+        "      - name: id\n"
+        "        tests:\n"
+        "        data_tests: [not_null]\n"
+    )
+    p = SparkProject.load(root)
+    assert p.manifest.get("model.shop.orders").columns == {}
+    assert {(t.test_type, t.model_name, t.column_name) for t in p.tests} == {
+        ("unique", "items", None),
+        ("not_null", "items", "id"),
+    }
 
 
 @pytest.mark.parametrize(
