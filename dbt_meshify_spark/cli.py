@@ -32,7 +32,6 @@ from dbt_meshify_spark.plans.splitter import (
 )
 from dbt_meshify_spark.plans.versions import BumpBehavior, add_version, bump_version
 from dbt_meshify_spark.project.loader import SparkProject
-from dbt_meshify_spark.project.runner import ProjectRunner
 
 
 class MultiOption(click.Option):
@@ -199,6 +198,7 @@ def _lazy_schemas(project: SparkProject):
     """model name -> DataFrame with the model's schema, computed WITHOUT
     executing jobs: every materialization degrades to a lazy temp view when
     the runner has no warehouse (Python models are the exception — they run)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     runner = ProjectRunner(get_spark(app_name="meshify-catalog"), project)
@@ -595,6 +595,7 @@ def run(select, exclude, project_path, warehouse_dir, full_refresh, vars_, state
     """Materialize models on Spark in DAG order (the reference shells into
     `dbt run`, dbt.py:36-65; here the engine executes directly). Writes
     target/manifest.json for later state:modified runs."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(
@@ -625,6 +626,7 @@ def run(select, exclude, project_path, warehouse_dir, full_refresh, vars_, state
 @click.option("--warehouse-dir", default=None, type=click.Path())
 def snapshot(select, project_path, warehouse_dir) -> None:
     """Run SCD2 snapshots (the `dbt snapshot` analog)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(project_path)
@@ -649,6 +651,7 @@ def snapshot(select, project_path, warehouse_dir) -> None:
 def test(select, project_path, store_failures) -> None:
     """Run data tests (zero-row = pass) on Spark (reference delegates to
     `dbt test`; compiled semantics in SURVEY.md §2.4)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(project_path)
@@ -678,6 +681,7 @@ def test(select, project_path, store_failures) -> None:
 def build(select, project_path, warehouse_dir, full_refresh, store_failures) -> None:
     """Materialize + test interleaved in DAG order (`dbt build` semantics:
     a failing test skips everything downstream of its model)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(project_path)
@@ -710,6 +714,7 @@ def build(select, project_path, warehouse_dir, full_refresh, store_failures) -> 
 def unit_test(select, project_path) -> None:
     """Run dbt unit tests (unit_tests: blocks — fixture rows in, expected
     rows out, refs/sources mocked)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(project_path)
@@ -732,6 +737,7 @@ def metric(name, grain, project_path, limit) -> None:
     """Compile + run a declared metric (simple/ratio/derived) over its
     semantic model (SURVEY.md §2.3 M1; the reference only carries metric
     nodes through splits — here the engine executes them)."""
+    from dbt_meshify_spark.project.runner import ProjectRunner
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(project_path)

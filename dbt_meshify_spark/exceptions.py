@@ -17,9 +17,11 @@ from dbt_meshify_spark.plans.contracts import ContractViolation
 from dbt_meshify_spark.plans.grouper import GroupingError
 from dbt_meshify_spark.plans.selectors import SelectorError
 from dbt_meshify_spark.plans.splitter import SplitError
-from dbt_meshify_spark.project.compiler import CompileError
-from dbt_meshify_spark.project.runner import AccessViolation
-from dbt_meshify_spark.project.semantic import SemanticCompileError
+from dbt_meshify_spark.project.compiler import (
+    AccessViolation,
+    CompileError,
+    SemanticCompileError,
+)
 
 
 class FileEditorException(Exception):

@@ -13,10 +13,12 @@ docs-generate step. Enforcement is a StructType comparison before write
 from __future__ import annotations
 
 from pathlib import Path
-
-from pyspark.sql import DataFrame
+from typing import TYPE_CHECKING
 
 from dbt_meshify_spark.plans.changes import Change, EntityType, Operation
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # Normalization: contracts compare logical types, not physical spellings
 # (reference contractor.py:26-30 lowercases; we also collapse synonyms).

@@ -10,11 +10,12 @@ from __future__ import annotations
 import hashlib
 import re
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from dbt_meshify_spark.plans.manifest import Manifest
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # --------------------------------------------------------------------------
 # G1: selection grammar
@@ -343,6 +344,8 @@ def reachable_frame(
     the frontier is empty — for governance DAGs depth is tiny (<100).
     ``seeds`` must have column ``unique_id``.
     """
+    from pyspark.sql import functions as F
+
     key, next_key = ("src", "dst") if direction == "downstream" else ("dst", "src")
     seen = seeds.select(F.col("unique_id")).distinct()
     frontier = seen
@@ -373,6 +376,8 @@ def boundary_frame(edges: DataFrame, selected: DataFrame) -> DataFrame:
     Two hash joins + one union; both join keys are unique_id (high
     cardinality, no skew). Returns (unique_id, access).
     """
+    from pyspark.sql import functions as F
+
     sel = selected.select("unique_id").distinct()
     crossing = (
         edges.join(sel, edges.src == sel.unique_id, "left_semi")

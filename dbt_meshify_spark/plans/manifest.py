@@ -19,9 +19,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any, Iterable
+from typing import TYPE_CHECKING, Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass

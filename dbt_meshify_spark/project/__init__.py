@@ -6,11 +6,11 @@ it on Spark (SURVEY.md §3.1 stages 2-6, restated Spark-native).
 - ``compiler``: jinja render with ref/source/var/env_var/config/
   is_incremental/this + project macros (real jinja2 macros, as in dbt).
 - ``runner``: topo-order materialization (view/table/incremental/ephemeral/
-  seed), contract + access enforcement, incremental upsert.
+  seed), contract + access enforcement, incremental upsert. It loads
+  pyspark, so it is imported from ``project.runner``, not re-exported here.
 - ``testing``: generic data tests compiled to zero-row-pass Spark SQL.
 """
 
 from dbt_meshify_spark.project.loader import SparkProject
-from dbt_meshify_spark.project.runner import ProjectRunner, RunResult
 
-__all__ = ["SparkProject", "ProjectRunner", "RunResult"]
+__all__ = ["SparkProject"]

@@ -70,6 +70,14 @@ class CompileError(Exception):
     pass
 
 
+class AccessViolation(CompileError):
+    """A ref the runner's access rules forbid, raised by its resolver."""
+
+
+class SemanticCompileError(Exception):
+    """A semantic model or metric spec the measure compiler cannot plan."""
+
+
 class Ref(NamedTuple):
     """One ``ref()`` call: positional ``args`` ``(name,)`` or ``(project,
     name)``, and the ``v=``/``version=`` pin (None when unpinned)."""
@@ -244,6 +252,11 @@ class JinjaCompiler:
             return ""
 
         def _ref(*args: str, **kwargs: Any) -> str:
+            if len(args) not in (1, 2):
+                raise CompileError(
+                    f"compile failed for {model_name}: ref() takes 1 or 2 "
+                    f"positional arguments, got {len(args)}"
+                )
             ref = _ref_call(args, kwargs)
             refs.append(ref)
             return resolve_ref(*ref.args, version=ref.version)

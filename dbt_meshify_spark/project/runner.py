@@ -33,13 +33,9 @@ from pyspark.sql import functions as F
 from dbt_meshify_spark.plans.contracts import enforce_contract
 from dbt_meshify_spark.plans.graph import select_resources
 from dbt_meshify_spark.plans.manifest import Resource
-from dbt_meshify_spark.project.compiler import CompileError
+from dbt_meshify_spark.project.compiler import AccessViolation, CompileError
 from dbt_meshify_spark.project.loader import SparkProject, TestSpec
 from dbt_meshify_spark.project.testing import compile_test
-
-
-class AccessViolation(CompileError):
-    pass
 
 
 @dataclass

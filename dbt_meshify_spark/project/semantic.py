@@ -20,6 +20,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_meshify_spark.project.compiler import SemanticCompileError
+
 _AGGS = {
     "sum": F.sum,
     "min": F.min,
@@ -32,10 +34,6 @@ _AGGS = {
 
 # grains that date_trunc accepts, narrowest-first
 _GRAINS = ("day", "week", "month", "quarter", "year")
-
-
-class SemanticCompileError(Exception):
-    pass
 
 
 def model_name_of(spec: dict[str, Any]) -> str:

@@ -8,14 +8,14 @@ from pathlib import Path
 
 import pytest
 
-from dbt_meshify_spark.project import ProjectRunner, SparkProject
+from dbt_meshify_spark.project import SparkProject
 from dbt_meshify_spark.project.compiler import (
     CompileError,
     JinjaCompiler,
     ModelCalls,
     Ref,
 )
-from dbt_meshify_spark.project.runner import AccessViolation
+from dbt_meshify_spark.project.runner import AccessViolation, ProjectRunner
 
 FIXTURE = Path(__file__).parent / "fixtures" / "tpch_proj"
 
@@ -335,9 +335,9 @@ _A = [Ref(("a",), None)]
         ("{{ unknown_fn() }}", CompileError),
         ("{{ calls_ref() }}", CompileError),
         ("{{ loops(['x']) }}{{ ref('a') }}", _A),
-        ("{{ ref('p', 'a', 'b') }}", [Ref(("p", "a", "b"), None)]),
+        ("{{ ref('p', 'a', 'b') }}", CompileError),
         ("{{ ref('a', foo=1) }}", _A),
-        ("{{ ref() }}", IndexError),
+        ("{{ ref() }}", CompileError),
         ("{{ source('s', 't', 'u') }}", TypeError),
         ("{{ ref('a' }}", CompileError),
         ("{{ -ref('a') }}", TypeError),
@@ -381,6 +381,18 @@ def test_loader_malformed_model_fails_naming_it(tmp_path, code):
     IndexError/TypeError/NameError/SyntaxError)."""
     root = _shop(tmp_path, {"orders.sql": "select 1 as id", "bad_one.sql": code})
     with pytest.raises(CompileError, match="^compile failed for bad_one: "):
+        SparkProject.load(root)
+
+
+def test_loader_three_arg_ref_fails_naming_it(tmp_path):
+    """dbt takes at most two positional ref args; a third fails the load
+    with a CompileError that names the model."""
+    root = _shop(tmp_path, {"bad_one.sql": "select * from {{ ref('p', 'a', 'b') }}"})
+    with pytest.raises(
+        CompileError,
+        match=r"^compile failed for bad_one: ref\(\) takes 1 or 2 positional "
+        "arguments, got 3$",
+    ):
         SparkProject.load(root)
 
 
