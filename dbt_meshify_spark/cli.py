@@ -194,29 +194,12 @@ def _selected_models(
     ]
 
 
-def _lazy_schemas(project: SparkProject):
-    """model name -> DataFrame with the model's schema, computed WITHOUT
-    executing jobs: every materialization degrades to a lazy temp view when
-    the runner has no warehouse (Python models are the exception — they run)."""
-    from dbt_meshify_spark.project.runner import ProjectRunner
-    from dbt_meshify_spark.session import get_spark
-
-    runner = ProjectRunner(get_spark(app_name="meshify-catalog"), project)
-    runner.run()
-    out = {}
-    for uid, r in project.manifest.models.items():
-        try:
-            out[r.name] = runner.spark.table(runner.relation_for(r))
-        except Exception:
-            pass
-    return out
-
-
 def _catalog_columns(project: SparkProject, read_catalog: bool) -> dict[str, list[dict]]:
     """model name -> [{name, data_type}] — from target/catalog.json when
     ``--read-catalog`` (reference cli.py:98-104, dbt_projects.py:279-290:
     skip docs-generate and trust the cached artifact), else from live Spark
-    schema analysis."""
+    schema analysis. The one place a schema becomes a column list:
+    ``add-contract``, ``group``, ``split`` and ``docs`` all read it."""
     import json
 
     cat_path = project.root / "target" / "catalog.json"
@@ -228,13 +211,25 @@ def _catalog_columns(project: SparkProject, read_catalog: bool) -> dict[str, lis
             ]
             for name, entry in doc.get("nodes", {}).items()
         }
-    return {
-        name: [
+    from dbt_meshify_spark.project.runner import ProjectRunner
+    from dbt_meshify_spark.session import get_spark
+
+    # computed WITHOUT executing jobs: every materialization degrades to a
+    # lazy temp view when the runner has no warehouse (Python models are the
+    # exception — they run)
+    runner = ProjectRunner(get_spark(app_name="meshify-catalog"), project)
+    runner.run()
+    out = {}
+    for r in project.manifest.models.values():
+        try:
+            df = runner.spark.table(runner.relation_for(r))
+        except Exception:
+            continue
+        out[r.name] = [
             {"name": f.name, "data_type": f.dataType.simpleString()}
             for f in df.schema.fields
         ]
-        for name, df in _lazy_schemas(project).items()
-    }
+    return out
 
 
 def _process(ctx: click.Context, *change_sets: ChangeSet) -> None:
@@ -304,7 +299,6 @@ def connect(ctx, project_paths, projects_dir, exclude_projects) -> None:
     import) into explicit cross-project refs (reference main.py:121-210;
     --projects-dir discovery semantics main.py:153-168)."""
     import itertools
-    from pathlib import Path
 
     if project_paths and projects_dir:
         raise click.BadOptionUsage(
@@ -376,8 +370,6 @@ def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> 
     """Generate enforced column contracts from live Spark schemas, or from
     target/catalog.json under --read-catalog — no Spark session at all
     (reference main.py:268-316, contractor.py:14-47)."""
-    from dbt_meshify_spark.plans.contracts import generate_contract_from_columns
-
     project = SparkProject.load(project_path)
     models = _selected_models(project, select, exclude, selector)
     if not models:
@@ -389,7 +381,7 @@ def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> 
         if cols is None:
             raise click.ClickException(f"could not derive schema for {r.name}")
         changes.add(
-            generate_contract_from_columns(r.name, cols, project.root / property_file(r))
+            generate_contract(r.name, cols, project.root / property_file(r))
         )
     _process(ctx, changes)
 
@@ -484,14 +476,14 @@ def group(
     project = SparkProject.load(project_path)
     owner = _owner(owner_name, owner_email, owner_properties)
     selected = _select(project, select, exclude, selector)
-    schemas = _lazy_schemas(project)
+    columns_by_model = _catalog_columns(project, False)
     path = _group_yml(project, group_yml_path)
 
     def contract_for(r):
-        df = schemas.get(r.name)
-        if df is None:
+        cols = columns_by_model.get(r.name)
+        if cols is None:
             return None
-        return generate_contract(r.name, df, project.root / property_file(r))
+        return generate_contract(r.name, cols, project.root / property_file(r))
 
     changes = group_and_contract(
         project.manifest,
@@ -568,11 +560,10 @@ def docs(project_path) -> None:
     import json
 
     project = SparkProject.load(project_path)
-    nodes = {}
-    for name, df in _lazy_schemas(project).items():
-        nodes[name] = {
-            "columns": {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        }
+    nodes = {
+        name: {"columns": {c["name"]: c["data_type"] for c in cols}}
+        for name, cols in _catalog_columns(project, False).items()
+    }
     out = Path(project_path) / "target"
     out.mkdir(exist_ok=True)
     (out / "catalog.json").write_text(json.dumps({"nodes": nodes}, indent=1))
@@ -580,6 +571,25 @@ def docs(project_path) -> None:
 
 
 # -- engine-side execution -------------------------------------------------------
+
+
+def _report(what: str, statuses: dict[str, str] | None = None, tests=()) -> None:
+    """Echo each model's status, then each test's PASS/FAIL line (with its
+    audit relation when failures were stored), and fail naming how many
+    ``what`` did not pass."""
+    failed = 0
+    for name, status in (statuses or {}).items():
+        click.echo(f"{name}: {status}")
+        failed += status != "ok"
+    for res in tests:
+        where = f" -> {res.relation}" if res.relation else ""
+        click.echo(
+            f"{res.name}: "
+            f"{'PASS' if res.passed else f'FAIL ({res.failures})'}{where}"
+        )
+        failed += not res.passed
+    if failed:
+        raise click.ClickException(f"{failed} {what} failed")
 
 
 @cli.command()
@@ -612,12 +622,7 @@ def run(select, exclude, project_path, warehouse_dir, full_refresh, vars_, state
     runner = ProjectRunner(get_spark(app_name="meshify-run"), project, warehouse_dir)
     result = runner.run(select=sel, full_refresh=full_refresh)
     project.manifest.write_artifact(Path(project_path) / "target" / "manifest.json")
-    failed = 0
-    for name, status in result.statuses.items():
-        click.echo(f"{name}: {status}")
-        failed += 0 if status == "ok" else 1
-    if failed:
-        raise click.ClickException(f"{failed} model(s) failed")
+    _report("model(s)", result.statuses)
 
 
 @cli.command()
@@ -635,12 +640,7 @@ def snapshot(select, project_path, warehouse_dir) -> None:
     )
     runner.run()  # snapshots may ref models/sources
     result = runner.snapshot(select=list(select) or None)
-    failed = 0
-    for name, status in result.statuses.items():
-        click.echo(f"{name}: {status}")
-        failed += 0 if status == "ok" else 1
-    if failed:
-        raise click.ClickException(f"{failed} snapshot(s) failed")
+    _report("snapshot(s)", result.statuses)
 
 
 @cli.command()
@@ -660,16 +660,7 @@ def test(select, project_path, store_failures) -> None:
     results = runner.test(
         select=list(select) or None, store_failures=store_failures
     )
-    failed = 0
-    for res in results:
-        where = f" -> {res.relation}" if res.relation else ""
-        click.echo(
-            f"{res.name}: "
-            f"{'PASS' if res.passed else f'FAIL ({res.failures})'}{where}"
-        )
-        failed += 0 if res.passed else 1
-    if failed:
-        raise click.ClickException(f"{failed} test(s) failed")
+    _report("test(s)", tests=results)
 
 
 @cli.command()
@@ -693,19 +684,7 @@ def build(select, project_path, warehouse_dir, full_refresh, store_failures) -> 
         full_refresh=full_refresh,
         store_failures=store_failures,
     )
-    failed = 0
-    for name, status in result.statuses.items():
-        click.echo(f"{name}: {status}")
-        failed += 0 if status == "ok" else 1
-    for res in tests:
-        where = f" -> {res.relation}" if res.relation else ""
-        click.echo(
-            f"{res.name}: "
-            f"{'PASS' if res.passed else f'FAIL ({res.failures})'}{where}"
-        )
-        failed += 0 if res.passed else 1
-    if failed:
-        raise click.ClickException(f"{failed} step(s) failed")
+    _report("step(s)", result.statuses, tests)
 
 
 @cli.command("unit-test")
@@ -720,12 +699,7 @@ def unit_test(select, project_path) -> None:
     project = SparkProject.load(project_path)
     runner = ProjectRunner(get_spark(app_name="meshify-unit-test"), project)
     results = runner.unit_test(select=list(select) or None)
-    failed = 0
-    for res in results:
-        click.echo(f"{res.name}: {'PASS' if res.passed else f'FAIL ({res.failures})'}")
-        failed += 0 if res.passed else 1
-    if failed:
-        raise click.ClickException(f"{failed} unit test(s) failed")
+    _report("unit test(s)", tests=results)
 
 
 @cli.command()
@@ -879,8 +853,6 @@ def lineage(project_paths, project_path, fmt, out) -> None:
         text = "\n".join(lines) + "\n"
 
     if out:
-        from pathlib import Path
-
         Path(out).write_text(text)
         click.echo(f"wrote {out}")
     else:
@@ -999,8 +971,6 @@ def dataset_card(sf_dir, out) -> None:
 
     text = "\n".join(lines) + "\n"
     if out:
-        from pathlib import Path
-
         Path(out).write_text(text)
         click.echo(f"wrote {out}")
     else:

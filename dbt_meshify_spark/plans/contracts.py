@@ -5,9 +5,12 @@ columns from the warehouse catalog, emit a YAML patch
 ``{config: {contract: {enforced: true}}, columns: [{name, data_type}]}``
 preserving the original column-name case, merging with any existing entry.
 
-Spark-native: the catalog IS ``df.schema`` / ``spark.catalog`` — no separate
-docs-generate step. Enforcement is a StructType comparison before write
-(SURVEY.md §4.2 'contract enforcement').
+Columns come in already listed: the CLI reads them from
+target/catalog.json under ``--read-catalog``, or from live Spark schemas
+(``cli._catalog_columns``); ``split`` falls back to property-file columns
+for a model neither knows. ``generate_contract`` is the only contract
+builder. Enforcement is a StructType comparison before write (SURVEY.md
+§4.2 'contract enforcement').
 """
 
 from __future__ import annotations
@@ -42,28 +45,11 @@ def normalize_type(t: str) -> str:
     return mapped + suffix
 
 
-def contract_columns(df: DataFrame) -> list[dict]:
-    """Column contract entries from a DataFrame's schema."""
-    return [
-        {"name": f.name, "data_type": f.dataType.simpleString()} for f in df.schema.fields
-    ]
-
-
 def generate_contract(
-    model_name: str, df: DataFrame, patch_path: Path
-) -> Change:
-    """V1: emit the contract patch for a model backed by ``df``."""
-    return generate_contract_from_columns(
-        model_name, contract_columns(df), patch_path
-    )
-
-
-def generate_contract_from_columns(
     model_name: str, columns: list[dict], patch_path: Path
 ) -> Change:
-    """V1 via pre-derived column dicts — the ``--read-catalog`` path, where
-    target/catalog.json supplies schemas and no Spark session is needed
-    (reference main.py:268-316 + dbt_projects.py:279-290)."""
+    """V1: the contract patch for a model with ``columns``
+    ([{name, data_type}]), from target/catalog.json or a live schema."""
     return Change(
         operation=Operation.Update,
         entity_type=EntityType.Model,

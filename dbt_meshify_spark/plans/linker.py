@@ -7,10 +7,11 @@ Reference behavior:
 - L2 package detection: md5 project-id membership test then shared relation
   names, expanding to children of the shared model in the downstream
   manifest (linker.py:124-198; dbt_projects.py:150-170).
-- L3 resolution: make the upstream model public + contracted, rewrite
-  downstream source()/ref() usages to cross-project refs, delete the source
-  YAML entry, and record the dependency in dependencies.yml
-  (linker.py:233-349).
+- L3 resolution: make the upstream model public, rewrite downstream
+  source()/ref() usages to cross-project refs, delete the source YAML
+  entry, and record the dependency in dependencies.yml (linker.py:233-349).
+  The reference also contracts the upstream model; ``connect`` never has,
+  since it reads no schema.
 
 Spark-native: "relation" is a catalog table name; deleting a source entry
 means dropping the external-table alias from our registry, not touching data.
@@ -23,8 +24,8 @@ from enum import Enum
 from pathlib import Path
 
 from dbt_meshify_spark.plans.changes import Change, ChangeSet, EntityType, Operation
-from dbt_meshify_spark.plans.contracts import generate_contract
 from dbt_meshify_spark.plans.graph import project_id
+from dbt_meshify_spark.plans.grouper import generate_access
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
 from dbt_meshify_spark.plans.references import (
     rewrite_ref_python,
@@ -147,29 +148,19 @@ def resolve_dependency(
     upstream: Manifest,
     downstream: Manifest,
     downstream_root: Path,
-    upstream_df=None,
     upstream_patch_path: Path | None = None,
 ) -> ChangeSet:
     """L3: plan the changes that convert an implicit dependency into an
-    explicit cross-project ref (reference linker.py:233-349)."""
+    explicit cross-project ref (reference linker.py:233-349). The upstream
+    model is made public when ``upstream_patch_path`` is given."""
     changes = ChangeSet()
     up_model = upstream.get(dep.upstream_resource)
     if up_model is None:
         raise KeyError(f"unknown upstream resource {dep.upstream_resource}")
 
-    # 1. upstream model becomes public (+ contracted when a frame is given)
+    # 1. upstream model becomes public
     if upstream_patch_path is not None:
-        changes.add(
-            Change(
-                operation=Operation.Update,
-                entity_type=EntityType.Model,
-                identifier=up_model.name,
-                path=upstream_patch_path,
-                data={"access": "public"},
-            )
-        )
-        if upstream_df is not None:
-            changes.add(generate_contract(up_model.name, upstream_df, upstream_patch_path))
+        changes.add(generate_access(up_model.name, "public", upstream_patch_path))
 
     if dep.type == DependencyType.Source:
         src = downstream.get(dep.downstream_resource)

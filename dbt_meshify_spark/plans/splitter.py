@@ -26,6 +26,7 @@ from dbt_meshify_spark.plans.changes import (
     dump_yaml,
     read_yaml,
 )
+from dbt_meshify_spark.plans.contracts import generate_contract
 from dbt_meshify_spark.plans.graph import (
     docs_closure,
     drop_test_nodes,
@@ -37,6 +38,7 @@ from dbt_meshify_spark.plans.graph import (
     xproj_children,
     xproj_parents,
 )
+from dbt_meshify_spark.plans.grouper import generate_access
 from dbt_meshify_spark.plans.jinja_blocks import find_block_span
 from dbt_meshify_spark.plans.manifest import Manifest, Resource, property_file
 from dbt_meshify_spark.plans.references import (
@@ -167,7 +169,9 @@ class SubprojectCreator:
     def _parent_path(self, resource: Resource) -> Path:
         return self.parent.root / resource.path
 
-    def _contract_columns(self, resource: Resource) -> list[dict]:
+    def _columns(self, resource: Resource) -> list[dict]:
+        """The model's contract columns: the catalog's, else its
+        property-file columns."""
         if resource.name in self.catalog:
             return self.catalog[resource.name]
         return [
@@ -176,27 +180,6 @@ class SubprojectCreator:
         ]
 
     # -- change builders -----------------------------------------------------
-
-    def _generate_contract(self, resource: Resource, root: Path) -> Change:
-        return Change(
-            operation=Operation.Update,
-            entity_type=EntityType.Model,
-            identifier=resource.name,
-            path=root / property_file(resource),
-            data={
-                "config": {"contract": {"enforced": True}},
-                "columns": self._contract_columns(resource),
-            },
-        )
-
-    def _generate_access(self, resource: Resource, root: Path, access: str) -> Change:
-        return Change(
-            operation=Operation.Update,
-            entity_type=EntityType.Model,
-            identifier=resource.name,
-            path=root / property_file(resource),
-            data={"access": access},
-        )
 
     def _move_resource(self, resource: Resource) -> Change:
         return Change(
@@ -441,8 +424,9 @@ class SubprojectCreator:
                 if r.resource_type == "test" and len(uid.split(".")) >= 4:
                     continue
                 if uid in sub.boundary_models:
-                    changes.add(self._generate_contract(r, sub.path))
-                    changes.add(self._generate_access(r, sub.path, "public"))
+                    patch = sub.path / property_file(r)
+                    changes.add(generate_contract(r.name, self._columns(r), patch))
+                    changes.add(generate_access(r.name, "public", patch))
                     changes.extend(self._update_child_refs(r, changes))
                 if r.path:
                     changes.add(self._move_resource(r))
@@ -477,8 +461,9 @@ class SubprojectCreator:
             r = self.manifest.get(uid)
             if r is None or r.resource_type != "model":
                 continue
-            changes.add(self._generate_contract(r, self.parent.root))
-            changes.add(self._generate_access(r, self.parent.root, "public"))
+            patch = self.parent.root / property_file(r)
+            changes.add(generate_contract(r.name, self._columns(r), patch))
+            changes.add(generate_access(r.name, "public", patch))
 
         changes.add(self._write_project_file())
         if (self.parent.root / "packages.yml").exists():

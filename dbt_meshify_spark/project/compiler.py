@@ -12,13 +12,12 @@ Scope is the observed dbt surface (SURVEY.md §7.4.2), not all of dbt:
 ``is_incremental``, ``this``, ``doc``, project macros, and the dbt_utils
 builtins the reference corpus uses (generate_surrogate_key, date_spine).
 
-Three readers learn what a model's ``ref``/``source``/``config`` calls
-record, cheapest first; each one declines what it cannot read and hands
-the model to the next:
+Two readers learn what a model's ``ref``/``source``/``config`` calls
+record:
 
-1. Tokens. ``static_calls()`` first walks ``env.lex(raw_code)``, Jinja's
-   own tokenizer, and accepts a model only when its tokens are template
-   text and ``{{ NAME(literal, ..., key=literal, ...) }}`` groups, where a
+1. Tokens. ``static_calls()`` walks ``env.lex(raw_code)``, Jinja's own
+   tokenizer, and accepts a model only when its tokens are template text
+   and ``{{ NAME(literal, ..., key=literal, ...) }}`` groups, where a
    literal is a string with no backslash or line break, or a decimal
    integer without leading zeros. Any other token (a block tag, ``raw``, a
    comment, a float, a sign, a list or dict, a filter), a lexing error, a
@@ -26,27 +25,21 @@ the model to the next:
    ``true``/``false``/``none``), a positional argument after a keyword or
    a repeated keyword declines. Lexing is Jinja's, so delimiters,
    whitespace control and raw blocks follow Jinja's rules.
-2. Parse tree. A declined model is read off ``env.parse(raw_code)``
-   without generating, compiling or rendering code, like dbt's static
-   parser. It accepts a model only when the template body is ``{{ ... }}``
-   output of template text and plain calls with constant arguments
-   (strings, finite numbers, booleans, None, and lists, tuples and dicts
-   of them); this covers ``tags=['a']`` and ``meta={...}``.
-3. Compile. ``compile()`` renders the model with recording resolvers (the
+2. Compile. ``compile()`` renders the model with recording resolvers (the
    runner's path, and the only one that produces SQL).
 
-Both static readers pass each call to one rule, which accepts calls to
+The token reader passes each call to one rule, which accepts calls to
 ``ref`` (1-2 args, ``v=``/``version=``), ``source`` (2 args), ``config``,
 ``var`` (1-2 args) or a *safe* macro whose parameters fit the call. A macro
 is safe when its defaults are constants and its body is only template
 text, its own parameters and such calls to other safe macros (a least
-fixpoint, so recursion is never safe). When that rule rejects a call, or
-the parse-tree reader declines too -- statements, comments, ``this``,
-filters, attribute access, a syntax error -- ``static_calls()`` returns
-None and the caller falls back to ``compile()``, so errors and results for
-those models are unchanged. An accepted model is one ``compile()`` renders
-without error, recording the same refs, sources and config. ``compile()``
-reports any failure as a ``CompileError`` that names the model.
+fixpoint over the macro sources' parse tree, so recursion is never safe).
+When the token reader declines or that rule rejects a call,
+``static_calls()`` returns None and the caller falls back to ``compile()``,
+so errors and results for those models are unchanged. An accepted model is
+one ``compile()`` renders without error, recording the same refs, sources
+and config. ``compile()`` reports any failure as a ``CompileError`` that
+names the model.
 
 The macro module is compiled on the first ``compile()``; the macro sources
 are parsed when the compiler is built, so a syntax error still fails there,
@@ -190,13 +183,9 @@ class JinjaCompiler:
         return self._macro_ctx
 
     def static_calls(self, raw_code: str) -> ModelCalls | None:
-        """The model's calls read off its tokens or else its parse tree, or
-        None when only ``compile()`` can tell (module docstring)."""
-        if self.env.comment_start_string in raw_code:
-            return None
+        """The model's calls read off its tokens, or None when only
+        ``compile()`` can tell (module docstring)."""
         found = _lexed_calls(self.env, raw_code)
-        if found is None:
-            found = _parsed_calls(self.env, raw_code)
         if found is None:
             return None
         calls = ModelCalls(config={}, refs=[], sources=[])
@@ -420,7 +409,7 @@ def _literal(kind: str, value: str) -> Any:
     return _NOT_LITERAL
 
 
-# -- static reading of parse trees -------------------------------------------
+# -- macro safety, read off the macro sources' parse tree ---------------------
 
 # parameter names jinja gives a meaning of its own inside a macro
 _SPECIAL_PARAMS = frozenset(("caller", "varargs", "kwargs", "loop"))
@@ -459,29 +448,6 @@ def _is_const(node: nodes.Node) -> bool:
 
 def _all_str(values: list) -> bool:
     return all(isinstance(v, str) for v in values)
-
-
-def _parsed_calls(
-    env: jinja2.Environment, raw_code: str
-) -> list[tuple[str, list, dict[str, Any]]] | None:
-    """The calls of a template whose body is only text and ``{{ call }}``
-    output of plain calls, read off its parse tree; None otherwise."""
-    try:
-        tree = env.parse(raw_code)
-    except jinja2.TemplateSyntaxError:
-        return None
-    found = []
-    for node in tree.body:
-        if not isinstance(node, nodes.Output):
-            return None
-        for expr in node.nodes:
-            if isinstance(expr, nodes.TemplateData):
-                continue
-            call = _plain_call(expr)
-            if call is None:
-                return None
-            found.append(call)
-    return found
 
 
 def _plain_call(

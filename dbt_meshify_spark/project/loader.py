@@ -6,12 +6,12 @@ Reads dbt_project.yml, model SQL/Python files, property YAML (models,
 sources, exposures, groups, semantic models), macros, seeds, and custom
 generic tests, and derives depends_on edges and in-file config from each
 SQL model's ``ref``/``source``/``config`` calls. Those are read off the
-model's Jinja tokens or parse tree when the compiler can prove that equals
-a render (``JinjaCompiler.static_calls``); any other model is compiled
-with recording resolvers, and a model that fails to compile, or whose
-``ref()`` names no model, fails the load with a ``CompileError`` naming
-it. Python models' ``dbt.ref``/``dbt.source`` calls are
-matched by pattern. Pure driver-side work over bounded metadata.
+model's Jinja tokens when the compiler can prove that equals a render
+(``JinjaCompiler.static_calls``); any other model is compiled with
+recording resolvers, and a model that fails to compile, or whose ``ref()``
+names no model, fails the load with a ``CompileError`` naming it. Python
+models' ``dbt.ref``/``dbt.source`` calls are matched by pattern. Pure
+driver-side work over bounded metadata.
 """
 
 from __future__ import annotations

@@ -12,7 +12,6 @@ from dbt_meshify_spark.project import SparkProject
 from dbt_meshify_spark.project.compiler import (
     CompileError,
     JinjaCompiler,
-    ModelCalls,
     Ref,
 )
 from dbt_meshify_spark.project.runner import AccessViolation, ProjectRunner
@@ -174,13 +173,13 @@ def test_loader_bad_macro_file_fails_at_load(tmp_path, macros):
 
 def test_loader_compiles_no_meshgen_model(tmp_path, monkeypatch):
     """Every generated model's edges come off its tokens: loading the
-    monolith generates and compiles no Jinja template at all, and parses
-    only the macro sources, once."""
+    monolith generates and compiles no Jinja template at all. The tpch
+    fixture compiles only the macro module and the two models the token
+    reader declines. Each load parses only the macro sources, once."""
     import jinja2
 
     from perfbench import meshgen
 
-    info = meshgen.generate(tmp_path, 1, 8, 15)
     compiled, parsed = [], []
     real_compile, real_parse = jinja2.Environment.compile, jinja2.Environment.parse
     monkeypatch.setattr(
@@ -193,10 +192,19 @@ def test_loader_compiles_no_meshgen_model(tmp_path, monkeypatch):
         "parse",
         lambda self, *a, **k: parsed.append(a[0]) or real_parse(self, *a, **k),
     )
-    m = SparkProject.load(info["monolith"]).manifest
+    m = SparkProject.load(meshgen.generate(tmp_path, 1, 8, 15)["monolith"]).manifest
     assert len(m.models) == 120
     assert compiled == []
     assert len(parsed) == 1 and "{% macro generate_surrogate_key(" in parsed[0]
+
+    parsed.clear()
+    m = SparkProject.load(FIXTURE).manifest
+    assert len(parsed) == 1 and "{% macro generate_surrogate_key(" in parsed[0]
+    by_code = {r.raw_code: r.name for r in m.models.values()}
+    assert compiled[0] == parsed[0]
+    assert sorted(by_code[code] for code in compiled[1:]) == [
+        "customers_mart", "orders_mart"
+    ]
 
 
 def test_loader_config_precedence(project):
@@ -347,6 +355,7 @@ _A = [Ref(("a",), None)]
         ("{{ config(x=1e999) }}", NameError),
         ("{{ config(a=1, a=2) }}", SyntaxError),
         ("{{ ref(1) }}", [Ref((1,), None)]),
+        ("{{ config(materialized='table', tags=['a'], meta={'k': 1}) }}{{ var('v') }}", []),
     ],
 )
 def test_static_calls_fall_back(code, expected):
@@ -411,8 +420,8 @@ def test_compile_passes_resolver_errors_through():
     assert info.value is denied
 
 
-# Differential inputs for the token reader: each holds at least one call
-# the parse-tree path reads the same way, or a shape one of them declines.
+# Differential inputs for the token reader: calls it reads, and shapes it
+# declines or compile() rejects.
 _TOKEN_CASES = [
     "select\n  {{- ref('a') -}}  \n x {{- source('s', 't') }}",
     "{{+ ref('b') }}",
@@ -459,10 +468,9 @@ _TOKEN_CASES = [
 
 @pytest.mark.parametrize("code", _TOKEN_CASES)
 def test_static_calls_tokens_equal_parse_tree(code):
-    """The token reader answers exactly what the parse-tree reader answers:
-    the same ModelCalls, or None."""
-    from dbt_meshify_spark.project import compiler as C
-
+    """Reader agreement: whenever the token reader answers, it records
+    exactly the refs, sources and config compile() records; wherever
+    compile() raises, it answers None."""
     macros = [
         "{% macro cents_to_dollars(c, scale=2) %}{{ c }}/100::{{ scale }}"
         "{% endmacro %}",
@@ -471,16 +479,16 @@ def test_static_calls_tokens_equal_parse_tree(code):
     ]
     c = JinjaCompiler("p", macros)
     assert "not" in c._safe_macros
-    tree = C._parsed_calls(c.env, code)
-    by_tree = None
-    if tree is not None and "{#" not in code:
-        by_tree = ModelCalls(config={}, refs=[], sources=[])
-        if not all(c._record_static(by_tree, *call) for call in tree):
-            by_tree = None
-    assert c.static_calls(code) == by_tree
-    tokens = C._lexed_calls(c.env, code)
-    if tokens is not None:
-        assert tokens == tree
+    static = c.static_calls(code)
+    try:
+        full = _compile(c, code)
+    except CompileError:
+        assert static is None
+        return
+    if static is not None:
+        assert (static.refs, static.sources, static.config) == (
+            full.refs, full.sources, full.config
+        )
 
 
 def test_loader_reads_null_lists_as_empty(tmp_path):
@@ -513,7 +521,6 @@ def test_loader_reads_null_lists_as_empty(tmp_path):
     "code",
     [
         "select {{ cents_to_dollars('x') }}, {{ cents_to_dollars('y', scale=4) }}",
-        "{{ config(materialized='table', tags=['a'], meta={'k': 1}) }}{{ var('v') }}",
         "{{ ref('shop', 'a', v=2) }} {{ source('s', 't') }} {{ var('nope', 3) }}",
         "{{ wrap() }} {{ type_string() }}",
     ],

@@ -356,6 +356,49 @@ def test_cli_docs_then_split_read_catalog(proj_dir):
     assert cols.get("order_id") == "bigint"
 
 
+def _tree(root: Path) -> dict[str, bytes]:
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(root.rglob("*"))
+        if p.is_file() and "target" not in p.relative_to(root).parts
+    }
+
+
+def test_contracts_come_from_one_schema_source(spark, tmp_path):
+    """`docs` + `add-contract --read-catalog` writes the same property
+    files as a live `add-contract`, and `group` contracts its protected
+    models with the same entries `add-contract` writes."""
+    runner = CliRunner()
+    trees = {}
+    for name in ("cached", "live", "group"):
+        trees[name] = tmp_path / name
+        shutil.copytree(FIXTURE, trees[name])
+    add = ["operation", "add-contract", "-s", "path:models/staging"]
+
+    def ok(args):
+        result = runner.invoke(cli, args)
+        assert result.exit_code == 0, result.output
+
+    ok(["docs", "--project-path", str(trees["cached"])])
+    ok(add + ["--read-catalog", "--project-path", str(trees["cached"])])
+    ok(add + ["--project-path", str(trees["live"])])
+    assert _tree(trees["cached"]) == _tree(trees["live"]) != _tree(FIXTURE)
+
+    ok(["group", "staging", "-s", "path:models/staging", "--owner-name", "x",
+        "--project-path", str(trees["group"])])
+
+    def contracts(root):
+        props = yaml.safe_load((root / "models/staging/__models.yml").read_text())
+        return {
+            m["name"]: (m["config"]["contract"], m["columns"])
+            for m in props["models"]
+            if "contract" in m.get("config", {})
+        }
+
+    grouped, added = contracts(trees["group"]), contracts(trees["live"])
+    assert grouped and grouped == {name: added[name] for name in grouped}
+
+
 def test_cli_ls_and_state_modified(proj_dir):
     runner = CliRunner()
     out = runner.invoke(
@@ -582,6 +625,69 @@ def test_cli_explain_audits_plan(spark):
 
     bad = runner.invoke(cli, ["explain", "not_a_query"])
     assert bad.exit_code != 0 and "unknown query" in bad.output
+
+
+_BUILD_LINES = [
+    "status_labels: ok",
+    "stg_orders: ok",
+    "stg_lineitems: ok",
+    "stg_customers: ok",
+    "order_items_summary: ok",
+    "orders_mart: ok",
+    "customers_mart: ok",
+    "order_gaps: ok",
+    "status_names: ok",
+    "unique_status_labels_status: PASS",
+    "not_null_status_labels_status: PASS",
+    "unique_stg_orders_order_id: PASS",
+    "not_null_stg_orders_order_id: PASS",
+    "accepted_values_stg_orders_status: PASS",
+    "not_null_stg_lineitems_order_id: PASS",
+    "relationships_stg_lineitems_order_id: PASS",
+    "unique_stg_customers_customer_id: PASS",
+    "unique_order_items_summary_order_id: PASS",
+    "not_null_order_items_summary_order_id: PASS",
+    "expression_is_true_orders_mart: PASS",
+    "unique_orders_mart_order_id: PASS",
+    "positive_total_customers_mart_lifetime_value: PASS",
+]
+
+
+def test_cli_build_and_unit_test_print_results(spark, proj_dir, tmp_path):
+    """`build` and `unit-test` print one status line per model and one
+    PASS/FAIL line per test, and exit nonzero naming the failure count."""
+    runner = CliRunner()
+    build = ["build", "--project-path", str(proj_dir)]
+    unit = ["unit-test", "--project-path", str(proj_dir)]
+
+    result = runner.invoke(cli, build + ["--warehouse-dir", str(tmp_path / "wh1")])
+    assert (result.exit_code, result.output.splitlines()) == (0, _BUILD_LINES)
+    result = runner.invoke(cli, unit)
+    assert (result.exit_code, result.output) == (
+        0, "orders_mart_join_fills_missing_items: PASS\n"
+    )
+
+    # sabotage one seed test and one unit-test expectation
+    with open(proj_dir / "seeds/status_labels.csv", "a") as f:
+        f.write("P,Pending,4\n")
+    marts = proj_dir / "models/marts/__models.yml"
+    marts.write_text(marts.read_text().replace(
+        "{order_id: 2, count_items: 0,", "{order_id: 2, count_items: 99,"
+    ))
+    result = runner.invoke(cli, build + ["--warehouse-dir", str(tmp_path / "wh2")])
+    swap = {
+        "status_names: ok": "status_names: skipped (upstream failure)",
+        "unique_status_labels_status: PASS": "unique_status_labels_status: FAIL (1)",
+    }
+    assert (result.exit_code, result.output.splitlines()) == (
+        1, [swap.get(line, line) for line in _BUILD_LINES] + ["Error: 2 step(s) failed"]
+    )
+    result = runner.invoke(cli, unit)
+    assert (result.exit_code, result.output) == (
+        1,
+        "orders_mart_join_fills_missing_items: FAIL (2)\n"
+        "Error: 1 unit test(s) failed\n",
+    )
 
 
 def test_cli_connect_projects_dir_discovery(source_hack_pair, tmp_path):
