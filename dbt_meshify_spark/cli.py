@@ -232,12 +232,19 @@ def _catalog_columns(project: SparkProject, read_catalog: bool) -> dict[str, lis
     return out
 
 
-def _process(ctx: click.Context, *change_sets: ChangeSet) -> None:
+def _process(
+    ctx: click.Context, projects: list[SparkProject], *change_sets: ChangeSet
+) -> None:
+    """Apply the change sets, starting each property file of ``projects``
+    from the document their load parsed."""
     from dbt_meshify_spark.exceptions import FatalMeshifyException
     from dbt_meshify_spark.plans.changes import ChangeSetProcessorException
 
+    loaded = {path: doc for p in projects for path, doc in p.property_docs.items()}
     try:
-        ChangeSetProcessor(dry_run=ctx.obj["dry_run"]).process(list(change_sets))
+        ChangeSetProcessor(dry_run=ctx.obj["dry_run"]).process(
+            list(change_sets), loaded=loaded
+        )
     except ChangeSetProcessorException as e:
         # reference main.py raises FatalMeshifyException around every
         # command body; the CLI exits nonzero with the change + cause logged
@@ -273,7 +280,7 @@ def split(ctx, project_name, select, exclude, selector, project_path, create_pat
     except SplitError as e:
         raise click.ClickException(str(e))
     catalog = _catalog_columns(project, read_catalog)
-    _process(ctx, SubprojectCreator(sub, catalog).initialize())
+    _process(ctx, [project], SubprojectCreator(sub, catalog).initialize())
 
 
 # -- connect -----------------------------------------------------------------
@@ -350,7 +357,7 @@ def connect(ctx, project_paths, projects_dir, exclude_projects) -> None:
     if not change_sets:
         click.echo("no cross-project dependencies detected")
         return
-    _process(ctx, *change_sets)
+    _process(ctx, projects, *change_sets)
 
 
 # -- operation subgroup --------------------------------------------------------
@@ -383,7 +390,7 @@ def add_contract(ctx, select, exclude, selector, project_path, read_catalog) -> 
         changes.add(
             generate_contract(r.name, cols, project.root / property_file(r))
         )
-    _process(ctx, changes)
+    _process(ctx, [project], changes)
 
 
 @operation.command(name="add-version")
@@ -402,7 +409,7 @@ def op_add_version(ctx, select, exclude, selector, project_path, defined_in) -> 
                 defined_in=defined_in,
             )
         )
-    _process(ctx, *sets)
+    _process(ctx, [project], *sets)
 
 
 @operation.command(name="bump-version")
@@ -431,7 +438,7 @@ def op_bump_version(
                 defined_in=defined_in,
             )
         )
-    _process(ctx, *sets)
+    _process(ctx, [project], *sets)
 
 
 @operation.command(name="create-group", cls=TupleCompatibleCommand)
@@ -456,7 +463,7 @@ def op_create_group(
         path,
         lambda r: project.root / property_file(r),
     )
-    _process(ctx, changes)
+    _process(ctx, [project], changes)
 
 
 # -- composites ----------------------------------------------------------------
@@ -466,17 +473,20 @@ def op_create_group(
 @click.argument("name")
 @_required_selection
 @_owner_options
+@click.option("--read-catalog", "-r", is_flag=True,
+              help="trust target/catalog.json instead of live schema analysis")
 @click.pass_context
 def group(
     ctx, name, select, exclude, selector, project_path, owner_name, owner_email,
-    owner_properties, group_yml_path
+    owner_properties, group_yml_path, read_catalog
 ) -> None:
     """create-group + contracts on every protected boundary member
-    (reference main.py:632-687)."""
+    (reference main.py:632-687); under --read-catalog the contracts come
+    from target/catalog.json with no Spark session."""
     project = SparkProject.load(project_path)
     owner = _owner(owner_name, owner_email, owner_properties)
     selected = _select(project, select, exclude, selector)
-    columns_by_model = _catalog_columns(project, False)
+    columns_by_model = _catalog_columns(project, read_catalog)
     path = _group_yml(project, group_yml_path)
 
     def contract_for(r):
@@ -494,7 +504,7 @@ def group(
         lambda r: project.root / property_file(r),
         contract_for,
     )
-    _process(ctx, changes)
+    _process(ctx, [project], changes)
 
 
 @cli.command()
@@ -530,7 +540,7 @@ def version(
                 bump_version(r, patch, model_dir, behavior=behavior,
                              existing_versions=[1], defined_in=defined_in)
             )
-    _process(ctx, *sets)
+    _process(ctx, [project], *sets)
 
 
 @cli.command()

@@ -158,7 +158,7 @@ class SubprojectCreator:
         # model name -> [{name, data_type}] for contract generation; falls
         # back to property-file columns when the warehouse schema is absent.
         self.catalog = catalog or {}
-        # parent property files parsed so far by this plan, by path
+        # parent property files this plan has read, by path
         self._yml_docs: dict[Path, dict] = {}
 
     # -- path helpers --------------------------------------------------------
@@ -191,16 +191,17 @@ class SubprojectCreator:
         )
 
     def _yml_entry(self, resource: Resource) -> dict | None:
-        """Read the resource's current property-file entry from disk
-        (reference dbt_project_editors.py:66-90 load_resource_yml); each
-        file is parsed once per plan."""
+        """The resource's current property-file entry (reference
+        dbt_project_editors.py:66-90 load_resource_yml): from the document
+        the parent's load parsed, else read from disk once per plan."""
         if not resource.patch_path:
             return None
         path = self.parent.root / resource.patch_path
         if path not in self._yml_docs:
-            if not path.exists():
+            loaded = self.parent.property_docs.get(path.resolve())
+            if loaded is None and not path.exists():
                 return None
-            self._yml_docs[path] = read_yaml(path)
+            self._yml_docs[path] = read_yaml(path) if loaded is None else loaded
         doc = self._yml_docs[path]
         section = _ENTITY_BY_TYPE.get(
             resource.resource_type, EntityType.Model

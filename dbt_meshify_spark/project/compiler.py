@@ -15,16 +15,19 @@ builtins the reference corpus uses (generate_surrogate_key, date_spine).
 Two readers learn what a model's ``ref``/``source``/``config`` calls
 record:
 
-1. Tokens. ``static_calls()`` walks ``env.lex(raw_code)``, Jinja's own
-   tokenizer, and accepts a model only when its tokens are template text
-   and ``{{ NAME(literal, ..., key=literal, ...) }}`` groups, where a
-   literal is a string with no backslash or line break, or a decimal
-   integer without leading zeros. Any other token (a block tag, ``raw``, a
-   comment, a float, a sign, a list or dict, a filter), a lexing error, a
-   callee the parser reads as something other than a name (``not``,
-   ``true``/``false``/``none``), a positional argument after a keyword or
-   a repeated keyword declines. Lexing is Jinja's, so delimiters,
-   whitespace control and raw blocks follow Jinja's rules.
+1. Tokens. ``static_calls()`` skips template text to each ``{{``, ``{%``
+   or ``{#`` and tokenizes each ``{{ ... }}`` group with one compiled
+   regex whose rules are a subset of Jinja's lexer rules, tried in the
+   same order (end tag, whitespace, integer, ASCII name, string, ``( ) ,
+   =``). It accepts a model only when it is template text and ``{{
+   NAME(literal, ..., key=literal, ...) }}`` groups, where a literal is a
+   string with no backslash or line break, or a decimal integer without
+   leading zeros. A block tag, ``raw`` block or comment, ``{{+``, a
+   non-ASCII name, any other token (a float, a sign, a list or dict, a
+   filter), an unclosed group, a callee the parser reads as something
+   other than a name (``not``, ``true``/``false``/``none``), a positional
+   argument after a keyword or a repeated keyword declines. Wherever it
+   answers, Jinja's lexer yields the same tokens.
 2. Compile. ``compile()`` renders the model with recording resolvers (the
    runner's path, and the only one that produces SQL).
 
@@ -185,7 +188,7 @@ class JinjaCompiler:
     def static_calls(self, raw_code: str) -> ModelCalls | None:
         """The model's calls read off its tokens, or None when only
         ``compile()`` can tell (module docstring)."""
-        found = _lexed_calls(self.env, raw_code)
+        found = _scanned_calls(raw_code)
         if found is None:
             return None
         calls = ModelCalls(config={}, refs=[], sources=[])
@@ -321,42 +324,56 @@ def _tidy(sql: str) -> str:
     return "\n".join(out).strip()
 
 
-# -- static reading of token streams ------------------------------------------
+# -- static reading of call groups -------------------------------------------
 
 # callee names Jinja's parser reads as an operator or a constant, not a Name
 _NOT_CALLEES = frozenset(("not", "true", "false", "True", "False", "none", "None"))
 _DECIMAL = re.compile(r"[1-9][0-9]*|0")
 _LPAREN, _RPAREN, _COMMA, _ASSIGN = (("operator", op) for op in "(),=")
 _NOT_LITERAL = object()
+# where Jinja's lexer leaves template text: a variable, block or comment tag
+_TAG_START = re.compile(r"\{[{%#]")
+# one token inside ``{{ ... }}``, tried in Jinja's rule order: the end tag
+# first, so ``}}`` inside a string only ends the group outside that string
+_GROUP_TOKEN = re.compile(
+    r"(?P<end>-?\}\})|(?P<whitespace>\s+)|(?P<integer>[0-9]+)"
+    r"|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
+    r"""|(?P<string>'[^'\\\n\r]*'|"[^"\\\n\r]*")|(?P<operator>[(),=])"""
+)
 
 
-def _lexed_calls(
-    env: jinja2.Environment, raw_code: str
-) -> list[tuple[str, list, dict[str, Any]]] | None:
+def _scanned_calls(raw_code: str) -> list[tuple[str, list, dict[str, Any]]] | None:
     """The calls of a template made only of text and ``{{ call }}``
-    groups, read off Jinja's token stream; None for any other template."""
+    groups, tokenized as Jinja's lexer would; None for any other template
+    and for any group holding a token outside ``_GROUP_TOKEN``."""
     found = []
-    group: list[tuple[str, str]] | None = None
-    try:
-        for _, kind, value in env.lex(raw_code):
-            if kind == "whitespace":
-                continue
-            if group is None:
-                if kind == "variable_begin":
-                    group = []
-                elif kind != "data":
-                    return None
-            elif kind == "variable_end":
-                call = _group_call(group)
-                if call is None:
-                    return None
-                found.append(call)
-                group = None
-            else:
-                group.append((kind, value))
-    except jinja2.TemplateSyntaxError:
-        return None
-    return found if group is None else None
+    pos = 0
+    while True:
+        tag = _TAG_START.search(raw_code, pos)
+        if tag is None:
+            return found
+        pos = tag.end()
+        if tag.group()[1] != "{":
+            return None  # a block tag, raw block or comment
+        if raw_code.startswith("-", pos):
+            pos += 1
+        elif raw_code.startswith("+", pos):
+            return None
+        group: list[tuple[str, str]] = []
+        while True:
+            tok = _GROUP_TOKEN.match(raw_code, pos)
+            if tok is None:
+                return None  # another token, or the template ends in the group
+            pos = tok.end()
+            kind = tok.lastgroup
+            if kind == "end":
+                break
+            if kind != "whitespace":
+                group.append((kind, tok.group()))
+        call = _group_call(group)
+        if call is None:
+            return None
+        found.append(call)
 
 
 def _group_call(

@@ -72,6 +72,9 @@ class SparkProject:
         self.macro_sources: list[str] = []
         self.custom_test_sources: dict[str, str] = {}
         self.vars: dict[str, Any] = dict(config.get("vars", {}))
+        # parsed property files by resolved path, for the planners and the
+        # change-set processor of the command that loaded the project
+        self.property_docs: dict[Path, dict] = {}
 
     # -- loading -----------------------------------------------------------
 
@@ -212,6 +215,7 @@ class SparkProject:
         return out
 
     def _load_property_files(self) -> None:
+        root = self.root.resolve()
         for mdir in self._paths("model-paths", "models") + self._paths(
             "seed-paths", "seeds"
         ):
@@ -220,6 +224,7 @@ class SparkProject:
             for f in sorted(mdir.rglob("*.yml")) + sorted(mdir.rglob("*.yaml")):
                 doc = load_yaml(f.read_text()) or {}
                 rel = str(f.relative_to(self.root))
+                self.property_docs[root / rel] = doc
                 self._apply_model_patches(doc.get("models") or [], rel)
                 self._apply_model_patches(
                     doc.get("seeds") or [], rel, prefix="seed"
@@ -391,6 +396,10 @@ class SparkProject:
             for uid, r in self.manifest.resources.items()
             if r.resource_type == "source"
         }
+        # a macro call: the name not preceded by a word character or a dot
+        macro_call = re.compile(
+            r"(?<![\w.])(" + "|".join(map(re.escape, macro_ids)) + r")\s*\("
+        ) if macro_ids else None
         for uid, r in list(self.manifest.resources.items()):
             if r.resource_type not in ("model", "snapshot"):
                 continue
@@ -430,11 +439,10 @@ class SparkProject:
                         deps.add(sid)
                     else:
                         deps.add(f"source.{self.name}.{s}.{t}")
-                for mname, mid in macro_ids.items():
-                    if re.search(
-                        r"(^|[^\w.])" + re.escape(mname) + r"\s*\(", r.raw_code
-                    ):
-                        deps.add(mid)
+                if macro_call:
+                    deps.update(
+                        macro_ids[m.group(1)] for m in macro_call.finditer(r.raw_code)
+                    )
             # seeds referenced by ref() shadow model ids
             fixed: set[str] = set()
             for d in deps:

@@ -422,13 +422,112 @@ def test_processor_failure_leaves_earlier_changes_on_disk(tmp_path: Path):
     assert _models_in(ok)["m"]["access"] == "public"
 
 
+def _chain_and_reread(tmp_path: Path, text: str, changes: list) -> tuple[str, str]:
+    """The file after processing ``changes`` in one call that starts from
+    the loaded document, and after one call per change (re-reading the
+    file each time)."""
+    from dbt_meshify_spark.plans.changes import load_yaml
+
+    out = []
+    for run in ("chain", "reread"):
+        path = tmp_path / run / "_models.yml"
+        path.parent.mkdir(parents=True)
+        path.write_text(text)
+        moved = [
+            Change(c.operation, c.entity_type, c.identifier, path, c.data) for c in changes
+        ]
+        processor = ChangeSetProcessor(log=lambda _s: None)
+        if run == "chain":
+            loaded = {path.resolve(): load_yaml(text)}
+            processor.process([ChangeSet(moved)], loaded=loaded)
+            assert loaded == {path.resolve(): load_yaml(text)}  # never mutated
+        else:
+            for c in moved:
+                processor.process([ChangeSet([c])])
+        out.append(path.read_text())
+    return out[0], out[1]
+
+
+def test_processor_renormalizes_what_a_reread_would_change(tmp_path: Path):
+    """An entry a write and re-read would change again (a mapping that
+    reads as a named list only once pruned) keeps changing between edits of
+    its section, as re-reading the file between them makes it do."""
+    meta = {"meta": {"x": {"name": "o"}, "e": {}}}
+    patch = {"meta": {"o": {"email": "e"}}}
+    text = "models:\n- name: a\n  meta: {x: {name: o}, e: {}}\n- name: b\n"
+    chain, reread = _chain_and_reread(tmp_path / "keyed", text, [
+        _access(Path(), "b"), _access(Path(), "b", "private"),
+        Change(Operation.Update, EntityType.Model, "a", Path(), patch),
+    ])
+    assert chain == reread
+    assert read_yaml(tmp_path / "keyed" / "chain" / "_models.yml")["models"][0]["meta"] == [
+        {"name": "o", "email": "e"}
+    ]
+    chain, reread = _chain_and_reread(tmp_path / "edited", "models:\n- name: b\n", [
+        _access(Path(), "b"), Change(Operation.Update, EntityType.Model, "a", Path(), meta),
+        _access(Path(), "b", "private"), _access(Path(), "b"),
+        Change(Operation.Update, EntityType.Model, "a", Path(), patch),
+    ])
+    assert chain == reread
+
+
+def test_processor_never_mutates_a_loaded_source_table(tmp_path: Path):
+    """A table patch merges into a copy, also when the loaded document
+    keeps the source's tables as a mapping."""
+    text = "sources:\n- name: s\n  tables: {t: {name: t, meta: {k: 1}}}\n"
+    change = Change(Operation.Update, EntityType.Source, "s.t", Path(), {"meta": {"j": 2}})
+    chain, reread = _chain_and_reread(tmp_path, text, [change, change])
+    assert chain == reread
+
+
+def test_patch_changes_only_its_entry_through_yaml_aliases(tmp_path: Path):
+    """A contract patch on one model leaves another model whose config is
+    an alias of the same anchored mapping as it was (it leaked into both
+    while edits mutated a copy that kept the alias shared)."""
+    p = tmp_path / "_models.yml"
+    p.write_text(
+        "version: 2\nmodels:\n- name: a\n  config: &base {materialized: view}\n"
+        "- name: b\n  config: *base\n"
+    )
+    contract = {"config": {"contract": {"enforced": True}}}
+    ChangeSetProcessor(log=lambda _s: None).process(
+        [ChangeSet([Change(Operation.Update, EntityType.Model, "a", p, contract)])]
+    )
+    assert _models_in(p) == {
+        "a": {"name": "a", "config": {"materialized": "view", "contract": {"enforced": True}}},
+        "b": {"name": "b", "config": {"materialized": "view"}},
+    }
+
+
+def test_processor_resolves_paths_again_after_a_link_is_removed(tmp_path: Path):
+    """Resource changes of a path through a symbolic link edit the link's
+    target until a raw change removes the link; after that they edit the
+    path itself, as resolving every path anew would."""
+    real = tmp_path / "real"
+    _model_yml(real / "_models.yml", "a")
+    (tmp_path / "link").symlink_to(real, target_is_directory=True)
+    through = tmp_path / "link" / "_models.yml"
+    ChangeSetProcessor(log=lambda _s: None).process([ChangeSet([
+        _access(through, "a"),
+        Change(Operation.Remove, EntityType.Code, "link", tmp_path / "link"),
+        _access(through, "b", "private"),
+    ])])
+    assert _models_in(real / "_models.yml") == {"a": {"name": "a", "access": "public"}}
+    assert not through.parent.is_symlink()
+    assert _models_in(through) == {"b": {"name": "b", "access": "private"}}
+
+
 def test_add_contract_parses_and_writes_property_file_once(tmp_path: Path, monkeypatch):
+    """One command parses each of the project's YAML files exactly once,
+    across the loader and the change-set processor, and writes the edited
+    property file once."""
     import json
 
     from click.testing import CliRunner
 
     from dbt_meshify_spark.cli import cli
     from dbt_meshify_spark.plans import changes as C
+    from dbt_meshify_spark.project import loader
 
     names = [f"m{i:02d}" for i in range(15)]
     (tmp_path / "dbt_project.yml").write_text("name: counted\nversion: '1.0'\n")
@@ -441,17 +540,24 @@ def test_add_contract_parses_and_writes_property_file_once(tmp_path: Path, monke
     (tmp_path / "target" / "catalog.json").write_text(json.dumps(
         {"nodes": {n: {"columns": {"id": "int"}} for n in names}}
     ))
-    reads: list[Path] = []
+    texts = [(tmp_path / "dbt_project.yml").read_text(), props.read_text()]
+    parsed: list[str] = []
     writes: list[Path] = []
-    read, write = C.read_yaml, C.write_yaml
-    monkeypatch.setattr(C, "read_yaml", lambda p: reads.append(p) or read(p))
+    load, write = C.load_yaml, C.write_yaml
+
+    def counted_load(text):
+        parsed.append(text)
+        return load(text)
+
+    monkeypatch.setattr(C, "load_yaml", counted_load)
+    monkeypatch.setattr(loader, "load_yaml", counted_load)
     monkeypatch.setattr(C, "write_yaml", lambda p, d: writes.append(p) or write(p, d))
     res = CliRunner().invoke(cli, [
         "operation", "add-contract", "-r", "-s", "path:models",
         "--project-path", str(tmp_path),
     ])
     assert res.exit_code == 0, res.output
-    assert [p.resolve() for p in reads] == [props.resolve()]
+    assert sorted(parsed) == sorted(texts)
     assert [p.resolve() for p in writes] == [props.resolve()]
     models = _models_in(props)
     assert sorted(models) == names

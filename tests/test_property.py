@@ -5,7 +5,9 @@ and invariant checks over the governance primitives and selector grammar.
 
 from __future__ import annotations
 
+import dataclasses
 import string
+from pathlib import Path
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -17,6 +19,7 @@ from dbt_meshify_spark.plans.changes import (
     safe_update,
 )
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
+from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler
 
 _name = st.text(alphabet=string.ascii_lowercase, min_size=1, max_size=8)
 _scalar = st.one_of(st.integers(), st.booleans(), _name)
@@ -605,3 +608,231 @@ def test_geometric_noise_table_properties(eps, bound):
     for z in range(0, bound):
         if w[z + 1] > 100_000:
             assert w[z] / w[z + 1] <= math.exp(eps) * 1.001
+
+
+# -- model-call reader agrees with compile() ----------------------------------
+
+
+_GAP = st.sampled_from(["", " ", "\n"])
+_TEXT = st.sampled_from(["select a", " from ", "\n", "{ x }", "}}", "-", "é"])
+_LITERAL = st.sampled_from(
+    ["'a'", "'a'", '"b"', "'}}'", "'{#'", "'{% if %}'", "'é'", '"it\'s"', "0", "12"]
+)
+# callee -> positional argument counts and keywords that compile() accepts
+_SHAPES = {
+    "ref": (1, 2, ["v", "version"]),
+    "source": (2, 2, []),
+    "config": (0, 0, ["materialized", "unique_key"]),
+    "var": (1, 2, []),
+    "cents_to_dollars": (1, 2, ["scale"]),
+}
+
+
+@st.composite
+def _call_group(draw):
+    """A ``{{ call(...) }}`` group both readers accept."""
+    callee = draw(st.sampled_from(sorted(_SHAPES)))
+    low, high, keys = _SHAPES[callee]
+    args = [draw(_LITERAL) for _ in range(draw(st.integers(low, high)))]
+    if keys:
+        for key in draw(st.lists(st.sampled_from(keys), max_size=2, unique=True)):
+            args.append(f"{key}={draw(_LITERAL)}")
+    gap = lambda: draw(_GAP)  # noqa: E731
+    return (
+        draw(st.sampled_from(["{{", "{{-"])) + gap() + callee + gap() + "(" + gap()
+        + f",{gap()}".join(args) + gap() + ")" + gap()
+        + draw(st.sampled_from(["}}", "-}}"]))
+    )
+
+
+# (text, replacement) edits of a template: most give one that compile()
+# rejects or that the static reader must decline
+_EDITS = [
+    ("'a'", "007"), ("'a'", "1_000"), ("'a'", "0x1f"), ("'a'", "1.5"), ("'a'", "-1"),
+    ("'a'", "x"), ("'a'", "'a\nb'"), ("'a'", "'x\\\\y'"), ("'a'", "'a',"),
+    ("}}", "+}}"), ("{{", "{{+"), ("{{", "{# {{ ref('c') }} #}{{"),
+    ("{{", "{% if false %}{{ ref('c') }}{% endif %}{{"),
+    ("{{", "{{{"), ("ref", "réf"), ("ref", "not"), ("ref", "true"), ("ref", "ref2"),
+    ("(", "(clé='a', "), ("(", "(for='a', "), ("(", "(v=1, "), (" ", "\r\n"),
+    (")", ",)"), ("config(", "config('a', "),
+]
+
+
+def _edited(template_and_edits: tuple[str, list]) -> str:
+    """The template with each edit applied at its n-th match, if any."""
+    template, edits = template_and_edits
+    for (old, new), n in edits:
+        starts = [i for i in range(len(template)) if template.startswith(old, i)]
+        if starts:
+            i = starts[n % len(starts)]
+            template = template[:i] + new + template[i + len(old):]
+    return template
+
+
+_TEMPLATE = st.tuples(
+    st.lists(st.one_of(_call_group(), _TEXT), min_size=1, max_size=3).map("".join),
+    st.lists(st.tuples(st.sampled_from(_EDITS), st.integers(0, 3)), min_size=1, max_size=2),
+).map(_edited)
+_COMPILER = JinjaCompiler(
+    "p", ["{% macro cents_to_dollars(c, scale=2) %}{{ c }}/100::{{ scale }}"
+          "{% endmacro %}"]
+)
+
+
+@given(_TEMPLATE)
+@settings(max_examples=500, derandomize=True, deadline=None)
+def test_static_calls_agree_with_compile(code):
+    """Wherever ``static_calls`` answers, it records the refs, sources and
+    config ``compile()`` records; wherever ``compile()`` raises, it
+    declines."""
+    c = _COMPILER
+    static = c.static_calls(code)
+    try:
+        full = c.compile(code, "m", resolve_ref=lambda *a, **k: a[-1],
+                         resolve_source=lambda s, t: t)
+    except CompileError:
+        assert static is None
+        return
+    if static is not None:
+        assert (static.refs, static.sources, static.config) == (
+            full.refs, full.sources, full.config
+        )
+
+
+# -- in-memory edit chains equal re-read chains (C1-C3) -----------------------
+
+
+def _random_value(rnd, depth: int = 0):
+    pick = rnd.random()
+    if depth > 1 or pick < 0.4:
+        return rnd.choice(["x", 1, 0, True, None, ""])
+    if pick < 0.6:
+        return [_random_value(rnd, depth + 1) for _ in range(rnd.randint(0, 2))]
+    if pick < 0.8:
+        return {rnd.choice("pq"): _random_value(rnd, depth + 1) for _ in range(rnd.randint(0, 2))}
+    # a named list, possibly with a repeated or missing name
+    return [{"name": rnd.choice("ab")} if rnd.random() < 0.9 else {"p": 1}
+            for _ in range(rnd.randint(0, 3))]
+
+
+def _random_entry(rnd, with_tables: bool):
+    if rnd.random() < 0.03:
+        return "not a mapping"
+    entry = {"name": rnd.choice(["a", "b", "c", "a", "b", "c", 1, None])} if rnd.random() < 0.93 else {}
+    for key in rnd.sample(["description", "config", "columns", "meta", "empty"], rnd.randint(0, 3)):
+        entry[key] = {
+            "config": lambda: rnd.choice([{"materialized": "view"}, {"x": {}, "c": {"e": False}}]),
+            # mappings that look like a named list only once pruned
+            "meta": lambda: rnd.choice(
+                [{"o": {"name": "o"}, "e": {}}, {"x": {"name": "o"}, "e": {}}, {"k": 1}, {}]
+            ),
+            "empty": lambda: rnd.choice([{}, [], {"a": {}}]),
+        }.get(key, lambda: _random_value(rnd))()
+    if with_tables and rnd.random() < 0.8:
+        entry["tables"] = [{"name": rnd.choice(["t1", "t2"])} for _ in range(rnd.randint(0, 2))]
+        if rnd.random() < 0.2:
+            entry["tables"] = {t["name"]: t for t in entry["tables"]}
+    return entry
+
+
+def _random_doc(rnd) -> dict:
+    doc = {}
+    for key in rnd.sample(["version", "models", "sources", "exposures", "other"], rnd.randint(0, 5)):
+        if key == "version":
+            doc[key] = rnd.choice([2, 2, {}])
+        elif key == "other":
+            doc[key] = _random_value(rnd)
+        else:
+            doc[key] = [_random_entry(rnd, key == "sources") for _ in range(rnd.randint(0, 4))]
+    return doc
+
+
+def _random_change(rnd, root: Path, files: list[str]):
+    from dbt_meshify_spark.plans.changes import Change, EntityType, Operation
+
+    path = root / rnd.choice(files)
+    pick = rnd.random()
+    if pick < 0.06:
+        return Change(Operation.Move, EntityType.Code, "f", root / rnd.choice(files), source=path)
+    if pick < 0.09:
+        return Change(Operation.Remove, EntityType.Code, "f", path)
+    if pick < 0.11:
+        return Change(Operation.Copy, EntityType.Directory, "d", root / "copy", source=root / "m")
+    entity = rnd.choice([EntityType.Model, EntityType.Source, EntityType.Exposure])
+    identifier = rnd.choice(["a", "b", "c", "new"])
+    if entity == EntityType.Source and rnd.random() < 0.7:
+        identifier += "." + rnd.choice(["t1", "t2"])
+    if rnd.random() < 0.1:
+        path = root / "m" / ".." / path.relative_to(root)
+    if rnd.random() < 0.35:
+        return Change(Operation.Remove, entity, identifier, path)
+    patch = {}
+    for key in rnd.sample(["config", "columns", "meta", "name", "description"], rnd.randint(0, 3)):
+        patch[key] = {
+            "config": lambda: rnd.choice([{"contract": {"enforced": True}}, {"materialized": None}]),
+            "columns": lambda: [{"name": rnd.choice("ab"), "data_type": rnd.choice(["int", "string"])}
+                                for _ in range(rnd.randint(0, 2))],
+            "meta": lambda: rnd.choice([{"o": {"email": "e"}}, {"o": None}]),
+            "name": lambda: rnd.choice("abc"),
+        }.get(key, lambda: _random_value(rnd))()
+    return Change(rnd.choice([Operation.Update, Operation.Add]), entity, identifier, path, patch)
+
+
+@given(st.integers(min_value=0, max_value=2**32))
+@settings(max_examples=300, derandomize=True, deadline=None)
+def test_processor_chain_equals_reread_chain(seed):
+    """One ``process`` call over a change list, starting from the loaded
+    documents, writes the bytes (and fails at the change) that processing
+    each change alone, re-reading every file from disk, does; and it leaves
+    the loaded documents as parsed."""
+    import random
+    import tempfile
+
+    # a seeded generator: the shapes that matter are rare, and uniform
+    # draws reach them more often than hypothesis' shrinking-biased ones
+    rnd = random.Random(seed)
+
+    from dbt_meshify_spark.plans.changes import (
+        WRITE_OPTIONS,
+        ChangeSet,
+        ChangeSetProcessor,
+        ChangeSetProcessorException,
+        dump_yaml,
+        load_yaml,
+    )
+
+    files = ["m/one.yml", "m/two.yml", "m/sub/three.yml"]
+    docs = {f: _random_doc(rnd) for f in files[: rnd.randint(1, 3)]}
+    changes = [_random_change(rnd, Path("."), files) for _ in range(rnd.randint(1, 12))]
+    results = []
+    with tempfile.TemporaryDirectory() as tmp:
+        for run in ("chain", "reread"):
+            root = Path(tmp) / run
+            for f, doc in docs.items():
+                (root / f).parent.mkdir(parents=True, exist_ok=True)
+                (root / f).write_text(dump_yaml(doc, **WRITE_OPTIONS))
+            rebased = [
+                dataclasses.replace(
+                    c, path=root / c.path, source=c.source and root / c.source
+                )
+                for c in changes
+            ]
+            loaded = {(root / f).resolve(): load_yaml((root / f).read_text()) for f in docs}
+            before = dump_yaml(list(loaded.values()))
+            processor = ChangeSetProcessor(log=lambda _m: None)
+            failed = None
+            try:
+                if run == "chain":
+                    processor.process([ChangeSet(rebased)], loaded=loaded)
+                else:
+                    for c in rebased:
+                        processor.process([ChangeSet([c])])
+            except ChangeSetProcessorException as e:
+                failed = rebased.index(e.change)
+            assert dump_yaml(list(loaded.values())) == before
+            tree = {
+                str(p.relative_to(root)): p.read_text()
+                for p in sorted(root.rglob("*")) if p.is_file()
+            }
+            results.append((tree, failed))
+    assert results[0] == results[1]

@@ -30,9 +30,10 @@ print(json.dumps(seen))
 
 
 def test_governance_commands_load_no_spark(tmp_path):
-    a, b = tmp_path / "a", tmp_path / "b"
+    a, b, c = tmp_path / "a", tmp_path / "b", tmp_path / "c"
     info = meshgen.generate(a, 1, 8, 15)
     meshgen.generate(b, 1, 8, 15)
+    meshgen.generate(c, 1, 8, 15)
     mono_a, cons_a, mono_b = a / "monolith", a / "consumer", b / "monolith"
     commands = {
         "add-contract": ["operation", "add-contract", "-r",
@@ -45,6 +46,10 @@ def test_governance_commands_load_no_spark(tmp_path):
                   "--read-catalog", "--project-path", str(mono_b)],
         "connect": ["connect", "--project-paths", str(mono_a),
                     "--project-paths", str(cons_a)],
+        # contracts from target/catalog.json
+        "group": ["group", info["contract_domain"],
+                  "-s", f"path:models/{info['contract_domain']}",
+                  "--owner-name", "x", "-r", "--project-path", str(c / "monolith")],
     }
     out = subprocess.run(
         [sys.executable, "-c", _SCRIPT, json.dumps([HEAVY, commands])],
