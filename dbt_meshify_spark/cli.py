@@ -240,7 +240,11 @@ def _process(
     from dbt_meshify_spark.exceptions import FatalMeshifyException
     from dbt_meshify_spark.plans.changes import ChangeSetProcessorException
 
-    loaded = {path: doc for p in projects for path, doc in p.property_docs.items()}
+    loaded = {
+        (p.root / rel).resolve(): doc
+        for p in projects
+        for rel, doc in p.property_docs.items()
+    }
     try:
         ChangeSetProcessor(dry_run=ctx.obj["dry_run"]).process(
             list(change_sets), loaded=loaded

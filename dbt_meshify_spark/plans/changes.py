@@ -31,17 +31,14 @@ project loader parses it, and ``ChangeSetProcessor.process(...,
 loaded=...)`` starts the file's first resource change from that document
 (never mutating it); a file the caller did not load is parsed on that
 first change. ``ResourceFileEditor.update``/``remove`` are pure transforms
-from one document to the next that copy only the entry they change. The
-first change's result becomes the file's draft (``_Draft``): the sections
-later changes edit are keyed by entry name once per file, each later
-change replaces one entry, and the draft is converted back and pruned once
-when it is written, giving the bytes the chain of whole-document edits
-gives. A document whose last resource is removed becomes a pending unlink.
-Drafts are flushed (written or unlinked, then forgotten) at two points
-only:
+from one document to the next that copy only the entry they change, so
+each later change of the file edits the previous change's document in
+memory. A document whose last resource is removed becomes a pending
+unlink. Pending documents are flushed (written or unlinked, then
+forgotten) at two points only:
 
-- before a raw-file or directory change, the drafts it touches: those whose
-  path equals the change's ``path`` or ``source``, or lies under it as a
+- before a raw-file or directory change, the documents it touches: those
+  whose path equals the change's ``path`` or ``source``, or lies under it as a
   directory. The loaded documents it touches are forgotten too, so a later
   change of such a file reads it from disk;
 - every remaining one once, when ``process`` returns or raises. A change
@@ -200,8 +197,9 @@ def _is_named_list(v: Any) -> bool:
 
 def merged(original: dict, update: dict) -> dict:
     """``original`` deep-merged with ``update``, where a None value deletes
-    the key (reference file_content_editors.py:81-93). Copy-on-write: only
-    the dicts on the merge path are copied, and neither input changes."""
+    the key (reference file_content_editors.py:81-93, ``safe_update``).
+    Copy-on-write: only the dicts on the merge path are copied, and
+    neither input changes."""
     out = dict(original)
     for key, value in update.items():
         if value is None:
@@ -211,14 +209,6 @@ def merged(original: dict, update: dict) -> dict:
         else:
             out[key] = value
     return out
-
-
-def safe_update(original: dict, update: dict) -> dict:
-    """``merged`` in place: ``original`` becomes the merge and is returned."""
-    result = merged(original, update)
-    original.clear()
-    original.update(result)
-    return original
 
 
 # Canonical key order for emitted model entries (reference
@@ -354,41 +344,17 @@ class ResourceFileEditor:
     the last resource is gone so the file can be deleted (reference
     file_content_editors.py:96-244, dbt_project_editors.py:354-389).
 
-    ``update``/``remove`` are pure: they key the section by entry name,
-    change one entry copy-on-write (``merged``), and return the next
-    document pruned as ``write_yaml`` writes it, so an in-memory chain of
-    edits equals one that re-reads the file between them, a failed edit
-    changes nothing, and the input document (or an object it shares with a
-    patch) is never mutated. A patch changes only the entry it names, also
-    where YAML aliases share a mapping between entries.
-    ``update_entries``/``remove_entries`` are the entry-level step on an
-    already keyed section, which the processor's drafts reuse."""
+    Both operations are pure: they key the section by entry name, change
+    one entry copy-on-write (``merged``), and return the next document
+    pruned as ``write_yaml`` writes it, so an in-memory chain of edits
+    equals one that re-reads the file between them, a failed edit changes
+    nothing, and the input document (or an object it shares with a patch)
+    is never mutated. A patch changes only the entry it names, also where
+    YAML aliases share a mapping between entries."""
 
     def __init__(self, entity_type: EntityType) -> None:
         self.entity_type = entity_type
         self.section = entity_type.pluralized
-
-    def update(self, doc: dict, identifier: str, patch: dict) -> dict:
-        doc = dict(doc)
-        doc.setdefault("version", 2)
-        entries = named_list_to_dict(doc.get(self.section) or [])
-        self.update_entries(entries, identifier, patch)
-        doc[self.section] = _to_list(entries)
-        return _prune_empty(doc)
-
-    def remove(self, doc: dict, identifier: str) -> dict | None:
-        """The document without ``identifier``, or None when no resource is
-        left in it (delete-file-when-empty)."""
-        doc = dict(doc)
-        entries = named_list_to_dict(doc.get(self.section) or [])
-        self.remove_entries(entries, identifier)
-        doc[self.section] = _to_list(entries)
-        remaining = [
-            k
-            for k, v in doc.items()
-            if k != "version" and v not in (None, [], {})
-        ]
-        return _prune_empty(doc) if remaining else None
 
     def _table(self, identifier: str) -> tuple[str, str] | None:
         """(source, table) for a source-table identifier ``source.table``."""
@@ -397,15 +363,15 @@ class ResourceFileEditor:
             return src_name, table_name
         return None
 
-    def update_entries(self, entries: dict, identifier: str, patch: dict) -> str:
-        """Replace the entry ``identifier`` names (its source, for a table)
-        in the keyed ``entries`` by the patched copy, mutating nothing
-        else and nothing at all when the patch fails; returns its key."""
+    def update(self, doc: dict, identifier: str, patch: dict) -> dict:
+        doc = dict(doc)
+        doc.setdefault("version", 2)
+        entries = named_list_to_dict(doc.get(self.section) or [])
         # the stored entries are NamedList-ified (lists of named dicts keyed
         # by name); the patch must be too, or a list-valued patch key (e.g.
         # columns) would clobber a named-merged dict instead of deep-merging
         # per entry (reference file_content_editors.py:14-49 round-trips
-        # everything through NamedList before safe_update)
+        # everything through NamedList before merging)
         patch = {
             k: (named_list_to_dict(v) if _is_named_list(v) else v)
             for k, v in patch.items()
@@ -422,140 +388,57 @@ class ResourceFileEditor:
             old = tables[table_name] if table_name in tables else {"name": table_name}
             tables[table_name] = merged(old, patch)
             entries[src_name] = {**src, "tables": tables}
-            return src_name
-        old = entries[identifier] if identifier in entries else {"name": identifier}
-        entries[identifier] = format_resource(merged(old, patch))
-        return identifier
+        else:
+            old = entries[identifier] if identifier in entries else {"name": identifier}
+            entries[identifier] = format_resource(merged(old, patch))
+        doc[self.section] = _to_list(entries)
+        return _prune_empty(doc)
 
-    def remove_entries(self, entries: dict, identifier: str) -> str | None:
-        """Drop ``identifier`` from the keyed ``entries``; returns the key of
-        the source entry left with fewer tables, else None."""
+    def remove(self, doc: dict, identifier: str) -> dict | None:
+        """The document without ``identifier``, or None when no resource is
+        left in it (delete-file-when-empty)."""
+        doc = dict(doc)
+        entries = named_list_to_dict(doc.get(self.section) or [])
         table = self._table(identifier)
-        if not table:
+        if table:
+            src_name, table_name = table
+            src = entries.get(src_name)
+            if src:
+                tables = {
+                    k: v for k, v in src.get("tables", {}).items() if k != table_name
+                }
+                if tables:
+                    entries[src_name] = {**src, "tables": tables}
+                else:
+                    entries.pop(src_name, None)
+        else:
             entries.pop(identifier, None)
-            return None
-        src_name, table_name = table
-        src = entries.get(src_name)
-        if not src:
-            return None
-        tables = {k: v for k, v in src.get("tables", {}).items() if k != table_name}
-        if not tables:
-            entries.pop(src_name, None)
-            return None
-        entries[src_name] = {**src, "tables": tables}
-        return src_name
-
-
-def _listed(entry: Any) -> Any:
-    """A keyed entry as written: its named dicts back to named lists."""
-    if not isinstance(entry, dict):
-        return entry
-    return {
-        k: (dict_to_named_list(v) if isinstance(v, dict) and _looks_named(v) else v)
-        for k, v in entry.items()
-    }
+        doc[self.section] = _to_list(entries)
+        remaining = [
+            k
+            for k, v in doc.items()
+            if k != "version" and v not in (None, [], {})
+        ]
+        return _prune_empty(doc) if remaining else None
 
 
 def _to_list(entries: dict) -> list:
-    return [_listed(entry) for entry in entries.values()]
+    """Keyed entries as written: their named dicts back to named lists."""
+    return [
+        {
+            k: (dict_to_named_list(v) if isinstance(v, dict) and _looks_named(v) else v)
+            for k, v in entry.items()
+        }
+        if isinstance(entry, dict)
+        else entry
+        for entry in entries.values()
+    ]
 
 
 def _looks_named(v: dict) -> bool:
     return bool(v) and all(
         isinstance(e, dict) and _entry_key(e) is not None for e in v.values()
     )
-
-
-def _rekeyed(entry: dict) -> dict:
-    """What writing and re-reading its section make of a keyed entry."""
-    pruned = _prune_empty(_listed(entry))
-    return {
-        k: (named_list_to_dict(v) if _is_named_list(v) else v)
-        for k, v in pruned.items()
-    }
-
-
-class _Draft:
-    """One property file's next document within a ``process`` call.
-
-    ``doc`` is what the editor's whole-document step returned for the
-    file's first resource change (pruned, in the key order the file will
-    have). A section that a later change edits is keyed by entry name once,
-    into ``keyed``; while keyed, its value in ``doc`` is stale, and each
-    edit replaces one entry. A whole-document chain writes the section and
-    reads it back between two edits, which normalizes every entry
-    (``_rekeyed``); the draft re-normalizes only the entries in ``dirty``:
-    the last one edited and any whose normal form is not yet stable. A
-    section whose entries are not dicts keyed by distinct string names, or
-    an edit that renames an entry, takes the editor's whole-document step
-    instead. ``doc`` None is a pending unlink."""
-
-    def __init__(self, doc: dict | None, change: Change) -> None:
-        self.doc = doc
-        self.last = change
-        self.keyed: dict[str, dict] = {}
-        self.dirty: dict[str, set] = {}
-
-    def document(self) -> dict | None:
-        """The document the whole-document chain would have, before
-        ``write_yaml`` prunes it."""
-        if self.doc is None:
-            return None
-        return {
-            k: (_to_list(self.keyed[k]) if k in self.keyed else v)
-            for k, v in self.doc.items()
-        }
-
-    def edit(self, editor: ResourceFileEditor, change: Change) -> None:
-        """Apply one resource change; nothing changes when it raises."""
-        section = editor.section
-        nxt = self._next_entries(section)
-        if nxt is None:
-            doc = _prune_empty(self.document())
-            if change.operation == Operation.Remove:
-                doc = editor.remove(doc, change.identifier)
-            else:
-                doc = editor.update(doc, change.identifier, change.data or {})
-            self.doc, self.keyed, self.dirty, self.last = doc, {}, {}, change
-            return
-        entries, dirty = nxt
-        if change.operation == Operation.Remove:
-            touched = editor.remove_entries(entries, change.identifier)
-            dirty &= entries.keys()
-            left = {**self.keyed, section: entries}
-            if not any(
-                left[k] if k in left else v not in (None, [], {})
-                for k, v in self.doc.items()
-                if k != "version"
-            ):
-                self.doc, self.last = None, change
-                return
-            if not entries:
-                self.doc.pop(section, None)
-        else:
-            touched = editor.update_entries(entries, change.identifier, change.data or {})
-            self.doc.setdefault("version", 2)
-            self.doc.setdefault(section, None)
-        if touched is not None:
-            dirty.add(touched)
-        self.keyed[section], self.dirty[section], self.last = entries, dirty, change
-
-    def _next_entries(self, section: str) -> tuple[dict, set] | None:
-        """A new keyed dict of the section as the next whole-document edit
-        would read it, and its entries that are not yet stable; None when
-        the section cannot be keyed."""
-        if section not in self.keyed:
-            items = self.doc.get(section) or []
-            entries = named_list_to_dict(items)
-            if len(entries) != len(items) or not all(type(k) is str for k in entries):
-                return None
-            return entries, {k for k, e in entries.items() if _rekeyed(e) != e}
-        entries = dict(self.keyed[section])
-        fresh = {k: _rekeyed(entries[k]) for k in self.dirty[section]}
-        if any(_entry_key(e) != k for k, e in fresh.items()):
-            return None
-        entries.update(fresh)
-        return entries, {k for k, e in fresh.items() if _rekeyed(e) != e}
 
 
 # --------------------------------------------------------------------------
@@ -668,71 +551,53 @@ def _under(path: str, bound: str) -> bool:
 
 
 class _PendingDocs:
-    """Property-file drafts edited in memory during one ``process`` call,
-    by resolved path, and the caller's parsed documents not yet edited
-    (``loaded``). Each change path is resolved once: only moving or removing
-    a symbolic link, or a directory that may hold one, can make a path
-    resolve elsewhere, and such a change forgets every resolution."""
+    """Property-file documents edited in memory during one ``process`` call,
+    by resolved path (a None document is a pending unlink), and the
+    caller's parsed documents not yet edited (``loaded``)."""
 
     def __init__(self, loaded: dict[Path, dict] | None = None) -> None:
         self.loaded = dict(loaded or {})
-        self.drafts: dict[Path, _Draft] = {}
-        self._resolved: dict[Path, Path] = {}
-
-    def _key(self, path: Path) -> Path:
-        key = self._resolved.get(path)
-        if key is None:
-            key = self._resolved[path] = path.resolve()
-        return key
+        self.docs: dict[Path, tuple[dict | None, Change]] = {}
 
     def edit(self, change: Change) -> None:
         editor = ResourceFileEditor(change.entity_type)
-        key = self._key(change.path)
-        draft = self.drafts.get(key)
-        if draft is not None and draft.doc is not None:
-            draft.edit(editor, change)
-            return
-        if draft is not None:
-            doc = {}  # a pending unlink
+        key = change.path.resolve()
+        if key in self.docs:
+            doc = self.docs[key][0] or {}
         elif key in self.loaded:
             doc = self.loaded[key]
         else:
             doc = read_yaml(key)
         if change.operation == Operation.Remove:
-            self.drafts[key] = _Draft(editor.remove(doc, change.identifier), change)
+            doc = editor.remove(doc, change.identifier)
         else:
-            self.drafts[key] = _Draft(
-                editor.update(doc, change.identifier, change.data or {}), change
-            )
+            doc = editor.update(doc, change.identifier, change.data or {})
+        self.docs[key] = (doc, change)
 
     def flush(self, change: Change | None = None) -> None:
-        """Write or unlink, then forget, the drafts ``change`` touches (its
-        path or source is the draft's path or a directory above it), and
-        forget the loaded documents it touches; every draft when
-        ``change`` is None."""
+        """Write or unlink, then forget, the documents ``change`` touches
+        (its path or source is the document's path or a directory above
+        it), and forget the loaded documents it touches; every document
+        when ``change`` is None."""
         if change is None:
-            keys = list(self.drafts)
+            keys = list(self.docs)
         else:
-            paths = [p for p in (change.path, change.source) if p is not None]
-            bounds = [str(self._key(p)) for p in paths]
-            if change.operation in (Operation.Move, Operation.Remove) and any(
-                p.is_symlink() or p.is_dir() for p in paths
-            ):
-                self._resolved.clear()  # a moved or removed link re-points paths
+            bounds = [
+                str(p.resolve()) for p in (change.path, change.source) if p is not None
+            ]
 
             def touched(key: Path) -> bool:
                 return any(_under(str(key), b) for b in bounds)
 
-            keys = [k for k in self.drafts if touched(k)]
+            keys = [k for k in self.docs if touched(k)]
             for k in [k for k in self.loaded if touched(k)]:
                 del self.loaded[k]
         for key in keys:
-            draft = self.drafts.pop(key)
+            doc, last = self.docs.pop(key)
             try:
-                doc = draft.document()
                 if doc is None:
                     key.unlink(missing_ok=True)
                 else:
                     write_yaml(key, doc)
             except Exception as e:
-                raise ChangeSetProcessorException(draft.last, e) from e
+                raise ChangeSetProcessorException(last, e) from e

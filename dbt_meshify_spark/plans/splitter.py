@@ -24,7 +24,6 @@ from dbt_meshify_spark.plans.changes import (
     EntityType,
     Operation,
     dump_yaml,
-    read_yaml,
 )
 from dbt_meshify_spark.plans.contracts import generate_contract
 from dbt_meshify_spark.plans.graph import (
@@ -158,8 +157,6 @@ class SubprojectCreator:
         # model name -> [{name, data_type}] for contract generation; falls
         # back to property-file columns when the warehouse schema is absent.
         self.catalog = catalog or {}
-        # parent property files this plan has read, by path
-        self._yml_docs: dict[Path, dict] = {}
 
     # -- path helpers --------------------------------------------------------
 
@@ -192,17 +189,11 @@ class SubprojectCreator:
 
     def _yml_entry(self, resource: Resource) -> dict | None:
         """The resource's current property-file entry (reference
-        dbt_project_editors.py:66-90 load_resource_yml): from the document
-        the parent's load parsed, else read from disk once per plan."""
-        if not resource.patch_path:
+        dbt_project_editors.py:66-90 load_resource_yml), from the document
+        the parent's load parsed."""
+        doc = self.parent.property_docs.get(resource.patch_path or "")
+        if doc is None:
             return None
-        path = self.parent.root / resource.patch_path
-        if path not in self._yml_docs:
-            loaded = self.parent.property_docs.get(path.resolve())
-            if loaded is None and not path.exists():
-                return None
-            self._yml_docs[path] = read_yaml(path) if loaded is None else loaded
-        doc = self._yml_docs[path]
         section = _ENTITY_BY_TYPE.get(
             resource.resource_type, EntityType.Model
         ).pluralized

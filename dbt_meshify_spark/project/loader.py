@@ -72,9 +72,10 @@ class SparkProject:
         self.macro_sources: list[str] = []
         self.custom_test_sources: dict[str, str] = {}
         self.vars: dict[str, Any] = dict(config.get("vars", {}))
-        # parsed property files by resolved path, for the planners and the
-        # change-set processor of the command that loaded the project
-        self.property_docs: dict[Path, dict] = {}
+        # parsed property files by path relative to the root (the
+        # resources' ``patch_path``), for the planners and the change-set
+        # processor of the command that loaded the project
+        self.property_docs: dict[str, dict] = {}
 
     # -- loading -----------------------------------------------------------
 
@@ -215,7 +216,6 @@ class SparkProject:
         return out
 
     def _load_property_files(self) -> None:
-        root = self.root.resolve()
         for mdir in self._paths("model-paths", "models") + self._paths(
             "seed-paths", "seeds"
         ):
@@ -224,7 +224,7 @@ class SparkProject:
             for f in sorted(mdir.rglob("*.yml")) + sorted(mdir.rglob("*.yaml")):
                 doc = load_yaml(f.read_text()) or {}
                 rel = str(f.relative_to(self.root))
-                self.property_docs[root / rel] = doc
+                self.property_docs[rel] = doc
                 self._apply_model_patches(doc.get("models") or [], rel)
                 self._apply_model_patches(
                     doc.get("seeds") or [], rel, prefix="seed"

@@ -30,9 +30,9 @@ from dbt_meshify_spark.plans import references as R
 from dbt_meshify_spark.plans import versions as V
 from dbt_meshify_spark.plans.changes import (
     ResourceFileEditor,
+    merged,
     named_list_to_dict,
     read_yaml,
-    safe_update,
     write_yaml,
 )
 from dbt_meshify_spark.plans.contracts import (
@@ -220,8 +220,8 @@ def test_closures():
 
 def test_safe_update_none_deletes():
     doc = {"a": 1, "b": {"c": 2, "d": 3}}
-    safe_update(doc, {"b": {"c": None, "e": 4}, "f": 5})
-    assert doc == {"a": 1, "b": {"d": 3, "e": 4}, "f": 5}
+    out = merged(doc, {"b": {"c": None, "e": 4}, "f": 5})
+    assert out == {"a": 1, "b": {"d": 3, "e": 4}, "f": 5}
 
 
 def test_named_list_round_trip():
@@ -497,24 +497,6 @@ def test_patch_changes_only_its_entry_through_yaml_aliases(tmp_path: Path):
         "a": {"name": "a", "config": {"materialized": "view", "contract": {"enforced": True}}},
         "b": {"name": "b", "config": {"materialized": "view"}},
     }
-
-
-def test_processor_resolves_paths_again_after_a_link_is_removed(tmp_path: Path):
-    """Resource changes of a path through a symbolic link edit the link's
-    target until a raw change removes the link; after that they edit the
-    path itself, as resolving every path anew would."""
-    real = tmp_path / "real"
-    _model_yml(real / "_models.yml", "a")
-    (tmp_path / "link").symlink_to(real, target_is_directory=True)
-    through = tmp_path / "link" / "_models.yml"
-    ChangeSetProcessor(log=lambda _s: None).process([ChangeSet([
-        _access(through, "a"),
-        Change(Operation.Remove, EntityType.Code, "link", tmp_path / "link"),
-        _access(through, "b", "private"),
-    ])])
-    assert _models_in(real / "_models.yml") == {"a": {"name": "a", "access": "public"}}
-    assert not through.parent.is_symlink()
-    assert _models_in(through) == {"b": {"name": "b", "access": "private"}}
 
 
 def test_add_contract_parses_and_writes_property_file_once(tmp_path: Path, monkeypatch):

@@ -15,8 +15,8 @@ from hypothesis import strategies as st
 from dbt_meshify_spark.plans import graph as G
 from dbt_meshify_spark.plans.changes import (
     dict_to_named_list,
+    merged,
     named_list_to_dict,
-    safe_update,
 )
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
 from dbt_meshify_spark.project.compiler import CompileError, JinjaCompiler
@@ -42,7 +42,7 @@ def test_named_list_round_trip(entries):
     assert dict_to_named_list(named_list_to_dict(entries)) == entries
 
 
-# -- safe_update algebra (C2) -------------------------------------------------
+# -- merge algebra (C2) -------------------------------------------------------
 
 
 _doc = st.recursive(
@@ -54,19 +54,19 @@ _doc = st.recursive(
 
 @given(_doc, _doc)
 def test_safe_update_idempotent(a, b):
-    once = safe_update(dict(a), b)
-    twice = safe_update(dict(once), b)
+    once = merged(a, b)
+    twice = merged(once, b)
     assert once == twice
 
 
 @given(_doc)
 def test_safe_update_identity(a):
-    assert safe_update(dict(a), {}) == a
+    assert merged(a, {}) == a
 
 
 @given(_doc, _name)
 def test_safe_update_none_deletes(a, key):
-    out = safe_update(dict(a), {key: None})
+    out = merged(a, {key: None})
     assert key not in out
 
 
