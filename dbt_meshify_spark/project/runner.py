@@ -36,6 +36,7 @@ from dbt_meshify_spark.plans.manifest import Resource
 from dbt_meshify_spark.project.compiler import AccessViolation, CompileError
 from dbt_meshify_spark.project.loader import SparkProject, TestSpec
 from dbt_meshify_spark.project.testing import compile_test
+from dbt_meshify_spark.sources import lakehouse
 
 
 @dataclass
@@ -90,7 +91,6 @@ class ProjectRunner:
         self.project = project
         self.warehouse_dir = Path(warehouse_dir) if warehouse_dir else None
         self.source_loader = source_loader or default_source_loader
-        self._table_versions: dict[str, int] = {}
         self._registered: set[str] = set()
         self._run_started_at = None
 
@@ -149,28 +149,20 @@ class ProjectRunner:
         df.createOrReplaceTempView(rel)
         self._registered.add(rel)
 
+    def _table_dir(self, name: str) -> str:
+        return str(self.warehouse_dir / name)
+
     def _write_table(
         self, name: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
-        """Write-then-swap parquet materialization; returns the view name.
-
-        ``partition_by`` maps dbt-spark's model config to physical layout:
-        downstream filters on partition columns become partition pruning at
-        the scan (the 100 TB lever for time-partitioned marts).
-        """
+        """Commit ``df`` as the next version of ``name`` (``sources.lakehouse``)
+        and point the view at it; returns the view name."""
         if self.warehouse_dir is None:
             # no warehouse: fall back to an eagerly-registered view
             df.createOrReplaceTempView(name)
             return name
-        version = self._table_versions.get(name, 0) + 1
-        path = self.warehouse_dir / name / f"v{version}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(path))
-        self._table_versions[name] = version
-        out = self.spark.read.parquet(str(path))
-        out.createOrReplaceTempView(name)
+        lakehouse.commit(df, self._table_dir(name), partition_by)
+        self._current_table(name).createOrReplaceTempView(name)
         return name
 
     def _write_bucketed_table(
@@ -190,7 +182,6 @@ class ProjectRunner:
             .format("parquet")
             .saveAsTable(name)
         )
-        self._table_versions[name] = self._table_versions.get(name, 0) + 1
         return name
 
     @staticmethod
@@ -208,13 +199,14 @@ class ProjectRunner:
         return ([cols] if isinstance(cols, str) else list(cols)), int(n)
 
     def _table_exists(self, name: str) -> bool:
-        return name in self._table_versions
+        """Whether the warehouse holds a committed version of ``name`` — read
+        from disk, so a new runner (or process) sees earlier runs' tables."""
+        return self.warehouse_dir is not None and bool(
+            lakehouse.current_version(self._table_dir(name))
+        )
 
     def _current_table(self, name: str) -> DataFrame:
-        version = self._table_versions[name]
-        return self.spark.read.parquet(
-            str(self.warehouse_dir / name / f"v{version}")
-        )
+        return lakehouse.read_current(self.spark, self._table_dir(name))
 
     def _materialize_model(self, r: Resource, full_refresh: bool) -> None:
         name = self.relation_for(r)
@@ -223,8 +215,11 @@ class ProjectRunner:
             materialized == "incremental"
             and self._table_exists(name)
             and not full_refresh
-            and self.warehouse_dir is not None
         )
+        if incremental_run:
+            # {{ this }}: the committed table, which a new runner has no view of
+            existing = self._current_table(name)
+            existing.createOrReplaceTempView(name)
         if r.language == "python":
             df, cfg = self._run_python_model(r)
             materialized = cfg.get("materialized", materialized)
@@ -261,7 +256,6 @@ class ProjectRunner:
             strategy = r.config.get("incremental_strategy") or (
                 "merge" if r.config.get("unique_key") else "append"
             )
-            existing = self._current_table(name)
             existing, df = self._align_incremental_schemas(
                 name, existing, df, r.config.get("on_schema_change", "ignore")
             )
@@ -269,15 +263,9 @@ class ProjectRunner:
             if strategy == "merge" and r.config.get("unique_key"):
                 unique_key = r.config.get("unique_key")
                 keys = [unique_key] if isinstance(unique_key, str) else list(unique_key)
-                survivors = existing.join(
-                    df.select(*keys).distinct(), on=keys, how="left_anti"
-                )
-                combined = df.unionByName(survivors)
+                combined = lakehouse.upsert(existing, df, keys)
             elif strategy == "insert_overwrite" and pcols:
-                survivors = existing.join(
-                    df.select(*pcols).distinct(), on=pcols, how="left_anti"
-                )
-                combined = df.unionByName(survivors)
+                combined = lakehouse.upsert(existing, df, pcols)
             else:  # append
                 combined = existing.unionByName(df)
             self._write_table(name, combined, pcols)

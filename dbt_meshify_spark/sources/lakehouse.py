@@ -1,18 +1,19 @@
-"""Lakehouse upsert adapter: real MERGE when a table format is installed,
-write-then-swap parquet otherwise.
+"""Versioned tables on disk: the one owner of "which version of a table is
+current" and "write version n+1", for the project runner (table, seed,
+incremental, snapshot and ``store_failures`` writes),
+``streaming.stream_to_incremental`` and ``merge_upsert``.
 
-The incremental algebra everywhere in this engine (runner merge strategy,
-``streaming.stream_to_incremental``) is "same-key new rows replace old" — at
-cluster scale that should execute as a transactional ``MERGE INTO`` on
-Delta/Iceberg (file-level pruning + conflict-safe commits) instead of
-rewriting the table. Neither format ships in this container, so the adapter
-resolves at runtime:
+A table is a directory of immutable ``v{n}`` parquet snapshots plus a
+``_VERSION`` marker naming the current one. ``commit`` writes ``v{n+1}``
+and only then publishes the marker, so a failed write leaves the previous
+version current and every process that opens the directory agrees on it.
 
-- Delta importable -> ``DeltaTable.merge`` (whenMatched update-all /
-  whenNotMatched insert-all, i.e. dbt-spark's merge strategy verbatim).
-- Otherwise -> the deterministic anti-join + union + versioned-parquet swap
-  used by the runner (correct, but rewrites; the 100 TB upgrade path is
-  "install Delta", not "change callers").
+``upsert`` is the incremental algebra everywhere in this engine: "same-key
+new rows replace old". At cluster scale that is a transactional ``MERGE
+INTO``, so ``merge_upsert`` runs ``DeltaTable.merge`` when Delta is
+importable (dbt-spark's merge strategy verbatim) and ``upsert`` +
+``commit`` otherwise (correct, but rewrites; the 100 TB upgrade path is
+"install Delta", not "change callers").
 
 Reference semantics: dbt incremental ``unique_key`` merge
 (/root/reference/test-projects/split/split_proj/models/marts/orders.sql:1-6).
@@ -20,8 +21,60 @@ Reference semantics: dbt incremental ``unique_key`` merge
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+_MARKER = "_VERSION"
+
+
+def _version_dir(table_dir: str, version: int) -> str:
+    return os.path.join(table_dir, f"v{version}")
+
+
+def current_version(table_dir: str) -> int:
+    """The published version at ``table_dir``; 0 when nothing was committed."""
+    try:
+        with open(os.path.join(table_dir, _MARKER)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return 0
+
+
+def read_current(spark: SparkSession, table_dir: str) -> DataFrame:
+    version = current_version(table_dir)
+    if not version:
+        raise FileNotFoundError(f"no table versions at {table_dir}")
+    return spark.read.parquet(_version_dir(table_dir, version))
+
+
+def commit(
+    df: DataFrame, table_dir: str, partition_by: list[str] | None = None
+) -> int:
+    """Write ``df`` as version n+1 of ``table_dir``, then publish it; returns
+    the new version. ``df`` may read the current version: it writes to a
+    fresh directory. ``partition_by`` maps dbt-spark's model config to
+    physical layout (filters on those columns prune at the scan)."""
+    version = current_version(table_dir) + 1
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(_version_dir(table_dir, version))
+    # publish by rename: a crash leaves the old marker or the new, never half
+    tmp = os.path.join(table_dir, _MARKER + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, os.path.join(table_dir, _MARKER))
+    return version
+
+
+def upsert(existing: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """``batch`` plus the ``existing`` rows whose ``keys`` it does not carry
+    (left_anti on the key columns only, so payloads never shuffle)."""
+    survivors = existing.join(batch.select(*keys).distinct(), on=keys, how="left_anti")
+    return batch.unionByName(survivors)
 
 
 def delta_available() -> bool:
@@ -43,7 +96,10 @@ def merge_upsert(
     creates the table on first call. Returns the post-merge table."""
     if delta_available():
         return _merge_delta(spark, target_dir, source, keys)
-    return _merge_parquet_swap(spark, target_dir, source, keys)
+    if current_version(target_dir):
+        source = upsert(read_current(spark, target_dir), source, keys)
+    commit(source, target_dir)
+    return read_current(spark, target_dir)
 
 
 def _merge_delta(
@@ -66,49 +122,18 @@ def _merge_delta(
     return spark.read.format("delta").load(target_dir)
 
 
-def _merge_parquet_swap(
-    spark: SparkSession, target_dir: str, source: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Versioned-parquet fallback: read v{n}, anti-join survivors, write
-    v{n+1}. The version marker lives in ``_VERSION`` so repeated calls (and
-    separate processes) agree on the current table."""
-    import os
-
-    marker = os.path.join(target_dir, "_VERSION")
-    version = 0
-    if os.path.exists(marker):
-        with open(marker) as f:
-            version = int(f.read().strip())
-    if version:
-        existing = spark.read.parquet(os.path.join(target_dir, f"v{version}"))
-        survivors = existing.join(
-            source.select(*keys).distinct(), on=keys, how="left_anti"
-        )
-        combined = source.unionByName(survivors)
-    else:
-        combined = source
-    version += 1
-    out_path = os.path.join(target_dir, f"v{version}")
-    combined.write.mode("overwrite").parquet(out_path)
-    os.makedirs(target_dir, exist_ok=True)
-    with open(marker, "w") as f:
-        f.write(str(version))
-    return spark.read.parquet(out_path)
-
-
 def list_versions(target_dir: str) -> list[int]:
-    """Versions available at ``target_dir`` (ascending). Parquet-swap tables
-    keep every ``v{n}`` directory precisely so trainings can pin the exact
-    snapshot they consumed; Delta tables answer from their own log."""
-    import os
-    import re
-
+    """Published versions at ``target_dir`` (ascending). Every ``v{n}``
+    directory is kept precisely so trainings can pin the exact snapshot
+    they consumed; a directory past the marker is a write that never
+    published and is not a version."""
     if not os.path.isdir(target_dir):
         return []
+    current = current_version(target_dir)
     return sorted(
-        int(m.group(1))
+        v
         for d in os.listdir(target_dir)
-        if (m := re.fullmatch(r"v(\d+)", d))
+        if (m := re.fullmatch(r"v(\d+)", d)) and (v := int(m.group(1))) <= current
     )
 
 
@@ -120,12 +145,10 @@ def read_table_version(
     version it read is exactly reproducible later, merges since
     notwithstanding — the dataset-lineage half of incremental curation.
 
-    Delta path: native ``versionAsOf``. Parquet-swap path: each merge wrote
+    Delta path: native ``versionAsOf``. Parquet path: each commit wrote
     an immutable ``v{n}`` directory, so the snapshot is a plain read of
     that directory.
     """
-    import os
-
     if delta_available():
         from delta.tables import DeltaTable
 
@@ -134,23 +157,19 @@ def read_table_version(
             if version is not None:
                 r = r.option("versionAsOf", version)
             return r.load(target_dir)
-    versions = list_versions(target_dir)
-    if not versions:
-        raise FileNotFoundError(f"no table versions at {target_dir}")
     if version is None:
-        marker = os.path.join(target_dir, "_VERSION")
-        with open(marker) as f:
-            version = int(f.read().strip())
+        return read_current(spark, target_dir)
+    versions = list_versions(target_dir)
     if version not in versions:
         raise ValueError(f"version {version} not in {versions} at {target_dir}")
-    return spark.read.parquet(os.path.join(target_dir, f"v{version}"))
+    return spark.read.parquet(_version_dir(target_dir, version))
 
 
 def expire_versions(
     spark: SparkSession, target_dir: str, keep_last: int = 2
 ) -> list[int]:
     """Retention maintenance for versioned tables (the VACUUM /
-    ``delta.logRetentionDuration`` analog of the parquet-swap path): delete
+    ``delta.logRetentionDuration`` analog of the parquet path): delete
     every snapshot older than the newest ``keep_last``, NEVER touching the
     current version. Returns the versions removed.
 
@@ -161,9 +180,6 @@ def expire_versions(
     retention window). Delta tables manage their own retention and are
     left alone.
     """
-    import os
-    import shutil
-
     if keep_last < 1:
         raise ValueError("expire_versions: keep_last must be >= 1")
     if delta_available():
@@ -171,18 +187,10 @@ def expire_versions(
 
         if DeltaTable.isDeltaTable(spark, target_dir):
             return []  # Delta retention is the engine's job (VACUUM)
-    versions = list_versions(target_dir)
-    doomed = versions[:-keep_last] if len(versions) > keep_last else []
-    marker = os.path.join(target_dir, "_VERSION")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = int(f.read().strip())
     removed = []
-    for v in doomed:
-        if v == current:
-            continue  # the live version is never expired
-        path = os.path.join(target_dir, f"v{v}")
+    # the newest published version is the current one: always kept
+    for v in list_versions(target_dir)[:-keep_last]:
+        path = _version_dir(target_dir, v)
         shutil.rmtree(path, ignore_errors=True)
         # report only what actually left the disk — a permission/NFS-busy
         # failure must not corrupt the caller's retention audit

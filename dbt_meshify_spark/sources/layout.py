@@ -16,8 +16,8 @@ The two layout problems every standing 100 TB parquet corpus grows:
   actually use).
 
 Both are one-shuffle rewrites, safe to run as periodic maintenance jobs:
-write-then-swap into place is the caller's policy (see
-``lakehouse.merge_upsert`` for the swap pattern).
+publishing the rewrite is the caller's policy (``lakehouse.commit``
+writes a new version, then publishes it).
 """
 
 from __future__ import annotations

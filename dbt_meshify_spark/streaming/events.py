@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbt_meshify_spark.sources import lakehouse
 from dbt_meshify_spark.streaming.sinks import drain
 
 EVENT_SCHEMA_NANOS = T.StructType(
@@ -422,18 +423,17 @@ def stream_to_incremental(
 
     Per micro-batch: (1) within-batch dedup keeps the latest row per key by
     ``order_by`` (deterministic row_number, not dropDuplicates — whose pick
-    is partition-order-dependent); (2) stored survivors = keys NOT in the
-    batch (left_anti on keys only — key columns, not payloads, drive the
-    shuffle); (3) write-then-swap to a fresh ``v{n}`` dir, mirroring the
-    runner's versioned parquet so the batch can read v{n-1} while writing
-    v{n}. Returns the final table.
+    is partition-order-dependent); (2) ``sources.lakehouse.upsert`` onto the
+    table's current version; (3) ``lakehouse.commit`` as the next version.
+    The table and the checkpoint both live under ``target_dir``, so a
+    resumed query merges onto what earlier runs stored, and a replayed
+    batch merges to the same table. Returns the final table.
 
-    At scale the swap becomes a real lakehouse MERGE (Delta/Iceberg, not in
-    this container); the micro-batch algebra is identical.
+    At scale the commit becomes a real lakehouse MERGE (Delta/Iceberg, not
+    in this container); the micro-batch algebra is identical.
     """
     spark = stream_df.sparkSession
     keys = [unique_key] if isinstance(unique_key, str) else list(unique_key)
-    state = {"version": 0}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         w = Window.partitionBy(*keys).orderBy(F.col(order_by).desc())
@@ -442,15 +442,9 @@ def stream_to_incremental(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        prev = state["version"]
-        if prev:
-            existing = spark.read.parquet(f"{target_dir}/v{prev}")
-            survivors = existing.join(b.select(*keys).distinct(), keys, "left_anti")
-            combined = b.unionByName(survivors)
-        else:
-            combined = b
-        state["version"] = prev + 1
-        combined.write.mode("overwrite").parquet(f"{target_dir}/v{state['version']}")
+        if lakehouse.current_version(target_dir):
+            b = lakehouse.upsert(lakehouse.read_current(spark, target_dir), b, keys)
+        lakehouse.commit(b, target_dir)
 
     q = (
         stream_df.writeStream.foreachBatch(upsert)
@@ -459,9 +453,9 @@ def stream_to_incremental(
         .start()
     )
     q.awaitTermination()
-    if not state["version"]:
+    if not lakehouse.current_version(target_dir):
         return spark.createDataFrame([], stream_df.schema)
-    return spark.read.parquet(f"{target_dir}/v{state['version']}")
+    return lakehouse.read_current(spark, target_dir)
 
 
 def run_to_memory(

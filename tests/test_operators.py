@@ -1133,6 +1133,26 @@ def test_merge_upsert_fallback_round_trips(spark, tmp_path):
     assert not delta_available()
 
 
+def test_failed_commit_keeps_current_version(spark, tmp_path):
+    """``commit`` publishes the marker only after the write: a write that
+    raises leaves the previous version current and readable."""
+    from dbt_meshify_spark.sources import lakehouse
+
+    tdir = str(tmp_path / "tbl")
+    assert lakehouse.current_version(tdir) == 0
+    assert lakehouse.commit(spark.range(3), tdir) == 1
+    bad = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        lakehouse.commit(bad, tdir)
+    assert lakehouse.current_version(tdir) == 1
+    assert lakehouse.list_versions(tdir) == [1]
+    assert sorted(r.id for r in lakehouse.read_current(spark, tdir).collect()) == [0, 1, 2]
+
+
 def test_bigram_perplexity_ranks_typical_below_atypical(spark):
     from dbt_meshify_spark.operators.lm import bigram_perplexity
 

@@ -738,11 +738,10 @@ def test_incremental_insert_overwrite_replaces_partitions(spark, tmp_path_factor
     # second run recomputes only partitions >= max(d) with doubled price;
     # those partitions must be REPLACED (not appended), everything else kept
     project2 = SparkProject.load(root, vars={"double": True})
-    runner2 = ProjectRunner(spark, project2, warehouse_dir=wh)
-    runner2._table_versions = dict(runner._table_versions)
-    runner2._registered = set(runner._registered)
+    spark2 = spark.newSession()
+    runner2 = ProjectRunner(spark2, project2, warehouse_dir=wh)
     assert runner2.run().ok
-    second = spark.table("daily")
+    second = spark2.table("daily")
     assert second.count() == base_count  # replaced, not duplicated
     doubled = second.filter(f"d = '{max_d}'").selectExpr("min(price)").first()[0]
     orig = first.filter(f"d = '{max_d}'").selectExpr("min(price)").first()[0]
@@ -802,11 +801,11 @@ def test_snapshot_scd2_timestamp(spark, snapshot_proj, tmp_path_factory):
 
     # customer 1 changes at t2; customer 2 unchanged; customer 3 appears
     write_source([(1, "active", t2), (2, "new", t1), (3, "new", t2)])
-    runner2 = ProjectRunner(spark, SparkProject.load(root), warehouse_dir=wh)
-    runner2._table_versions = dict(runner._table_versions)
+    spark2 = spark.newSession()
+    runner2 = ProjectRunner(spark2, SparkProject.load(root), warehouse_dir=wh)
     res = runner2.snapshot()
     assert res.ok, res.statuses
-    snap = spark.table("customers_snapshot")
+    snap = spark2.table("customers_snapshot")
     rows = {(r.id, r.status): r for r in snap.collect()}
     assert len(rows) == 4  # 2 original + 1 closed-superseding + 1 brand new
     closed = rows[(1, "new")]
@@ -817,6 +816,31 @@ def test_snapshot_scd2_timestamp(spark, snapshot_proj, tmp_path_factory):
     assert unchanged.dbt_valid_to is None
     fresh = rows[(3, "new")]
     assert fresh.dbt_valid_from == t2 and fresh.dbt_valid_to is None
+
+
+def test_failed_model_write_keeps_committed_table(spark, tmp_path_factory):
+    """A model whose write fails in a later run leaves the table it
+    committed earlier current and readable."""
+    from dbt_meshify_spark.sources import lakehouse
+
+    root = tmp_path_factory.mktemp("fail_proj")
+    (root / "models").mkdir()
+    (root / "dbt_project.yml").write_text("name: fail_proj\nmodel-paths: ['models']\n")
+    model = root / "models/nums.sql"
+    model.write_text("{{ config(materialized='table') }}\nselect id from range(3)\n")
+    wh = tmp_path_factory.mktemp("fail_wh")
+    assert ProjectRunner(spark, SparkProject.load(root), warehouse_dir=wh).run().ok
+
+    model.write_text(
+        "{{ config(materialized='table') }}\n"
+        "select if(id = 2, raise_error('boom'), id) as id from range(3)\n"
+    )
+    spark2 = spark.newSession()
+    res = ProjectRunner(spark2, SparkProject.load(root), warehouse_dir=wh).run()
+    assert res.statuses["nums"].startswith("error"), res.statuses
+    table = str(wh / "nums")
+    assert lakehouse.current_version(table) == 1
+    assert sorted(r.id for r in lakehouse.read_current(spark, table).collect()) == [0, 1, 2]
 
 
 # -- bucketed materialization (clustered_by/buckets) -------------------------

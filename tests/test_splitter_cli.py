@@ -662,6 +662,14 @@ def test_cli_build_and_unit_test_print_results(spark, proj_dir, tmp_path):
 
     result = runner.invoke(cli, build + ["--warehouse-dir", str(tmp_path / "wh1")])
     assert (result.exit_code, result.output.splitlines()) == (0, _BUILD_LINES)
+    # a second invocation on the same warehouse merges the incremental
+    # orders_mart onto v1 as v2, instead of rebuilding it over v1
+    result = runner.invoke(cli, build + ["--warehouse-dir", str(tmp_path / "wh1")])
+    assert (result.exit_code, result.output.splitlines()) == (0, _BUILD_LINES)
+    mart = tmp_path / "wh1" / "orders_mart"
+    assert (mart / "_VERSION").read_text() == "2"
+    v1, v2 = (spark.read.parquet(str(mart / v)) for v in ("v1", "v2"))
+    assert v2.count() == v1.count() == v2.select("order_id").distinct().count()
     result = runner.invoke(cli, unit)
     assert (result.exit_code, result.output) == (
         0, "orders_mart_join_fills_missing_items: PASS\n"

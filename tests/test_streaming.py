@@ -309,6 +309,58 @@ def test_stream_to_incremental_merges_like_batch_dedup(spark, tmp_path_factory):
     assert {tuple(r) for r in final2.collect()} == {tuple(r) for r in final.collect()}
 
 
+def _incremental_source(spark, src, name, rows):
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).coalesce(1).write.parquet(str(src / name))
+
+
+def _stream_to_incremental(spark, src, tgt):
+    from dbt_meshify_spark.streaming import stream_to_incremental
+
+    stream = read_events_stream(spark, str(src) + "/*/", nanos=False)
+    final = stream_to_incremental(stream, tgt, unique_key="user_id")
+    return {r.user_id: (r.event_id, r.value) for r in final.collect()}
+
+
+def test_stream_to_incremental_noop_resume_returns_stored_table(spark, tmp_path):
+    """Restarting on the same target and checkpoint with no new input
+    returns the table earlier runs stored, not an empty frame."""
+    import datetime as dt
+
+    src, tgt = tmp_path / "src", str(tmp_path / "tbl")
+    t0 = dt.datetime(2024, 3, 1)
+    _incremental_source(
+        spark, src, "f1", [(1, t0, 1, "click", 1.0, ""), (2, t0, 2, "click", 2.0, "")]
+    )
+    first = _stream_to_incremental(spark, src, tgt)
+    assert first == {1: (1, 1.0), 2: (2, 2.0)}
+    assert _stream_to_incremental(spark, src, tgt) == first
+
+
+def test_stream_to_incremental_resume_merges_onto_stored_table(spark, tmp_path):
+    """A resumed query merges its new batch onto the stored table and
+    commits the next version; the first batch's version stays readable."""
+    import datetime as dt
+
+    from dbt_meshify_spark.sources.lakehouse import read_table_version
+
+    src, tgt = tmp_path / "src", str(tmp_path / "tbl")
+    t0 = dt.datetime(2024, 3, 1)
+    _incremental_source(
+        spark, src, "f1", [(1, t0, 1, "click", 1.0, ""), (2, t0, 2, "click", 2.0, "")]
+    )
+    _stream_to_incremental(spark, src, tgt)
+    _incremental_source(
+        spark, src, "f2", [(3, t0 + dt.timedelta(minutes=5), 1, "click", 9.0, "")]
+    )
+    assert _stream_to_incremental(spark, src, tgt) == {1: (3, 9.0), 2: (2, 2.0)}
+    v1 = {(r.user_id, r.event_id) for r in read_table_version(spark, tgt, 1).collect()}
+    assert v1 == {(1, 1), (2, 2)}
+
+
 def test_stateful_totals_survive_restart(spark, tmp_path):
     """Exactly-once resume: kill the query, append new input, restart on the
     SAME checkpoint — per-user state must carry over (run 2 emits cumulative
