@@ -46,27 +46,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from dbt_meshify_spark.queries import QUERIES
-    from dbt_meshify_spark.session import _RUNTIME_CONF, prepare
+    from dbt_meshify_spark.session import builder_conf, prepare
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")  # auto-increments if taken; the
-        # bound port is read back from uiWebUrl below
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.sql.warehouse.dir",
-            f"/tmp/dbt-meshify-spark-warehouse-{os.getpid()}",
-        )
-    )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    spark = prepare(builder.getOrCreate())
+    # get_spark's session with the UI on: its REST API is scraped below
+    conf = {**builder_conf(), "spark.ui.enabled": "true", "spark.ui.port": "4049"}
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName("profile")
+    spark = prepare(builder.config(map=conf).getOrCreate())
     # read the ACTUAL bound UI url (Spark auto-increments the port when
     # 4049 is taken — a hardcoded url then scrapes the wrong app)
     ui = spark.sparkContext.uiWebUrl or "http://localhost:4049"

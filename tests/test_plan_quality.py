@@ -1184,3 +1184,31 @@ def test_pagerank_pin_policy_teleport_unpinned_redistribute_pinned(spark):
         "redistribute rounds unpinned — twice-consumed rank frames would "
         "re-execute the previous round per consumer"
     )
+
+
+def test_codegen_cache_keeps_a_repeated_plan_compiled(spark):
+    """Spark keeps compiled whole-stage and expression classes in an LRU
+    keyed by the generated source (``spark.sql.codegen.cache.maxEntries``,
+    default 100). One pass of a few queries generates more classes than
+    that, so at the default a plan run again after them compiles its
+    classes again. With the cache sized to the corpus (session.py), the
+    repeat compiles nothing."""
+    from tests.conftest import SF_SMOKE
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def run(name: str) -> int:
+        before = compiles.getCount()
+        QUERIES[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    first = run("ext_label_propagation")
+    # ~130 classes of their own, more than Spark's default bound
+    for name in ("ext_turn_echo", "ext_cluster_best_keep"):
+        run(name)
+    again = run("ext_label_propagation")
+    # a fresh session compiles ~64 classes for it and a repeat none (at
+    # Spark's default bound, all ~64 again); allow a few for an AQE re-plan
+    assert again <= 5, f"repeated plan recompiled {again} classes (first run: {first})"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
